@@ -10,6 +10,24 @@ import org.apache.spark.sql.SparkSession
   * partitions), shuffle partitions sized to the executor core count
   * (32 locally; thousands on a real cluster), and UTC session time so
   * event-time semantics are zone-independent.
+  *
+  * Local files: [[builder]] registers [[ForkFreeLocalFileSystem]] and
+  * [[ForkFreeLocalFs]] as the `file:` `FileSystem` and
+  * `AbstractFileSystem`, always. Without libhadoop, stock Hadoop forks
+  * `chmod` for every local file or directory it creates and `readlink`
+  * on every `FileContext` rename — the offset and commit logs, the
+  * state-store delta and checksum files and every sink file. One
+  * untraced `live` benchmark run (`perfbench/`, 20 s at `local[2]`, a
+  * 4-core box, 3 GB heap) started 1,525 to 1,642 processes in two
+  * recordings, half `chmod` and half `readlink`, 643 to 690 of them
+  * on the stream execution thread, at ~1.7 ms per fork+exec. With
+  * these classes it starts 22 to 24: Spark's own `rm -rf`, one
+  * `setsid` and one `getconf`. Bytes, permission bits and `.crc` files
+  * are unchanged. Without these settings `file:` resolves to hive-exec's
+  * `ProxyLocalFileSystem` (registered through the service loader), a
+  * proxy over the same stock `LocalFileSystem`. Only `file:` paths are
+  * affected; HDFS, ABFS and every other scheme keep their own
+  * implementations.
   */
 object GraftSession {
 
@@ -54,6 +72,10 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl",
+        classOf[ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[ForkFreeLocalFs].getName)
       // testdata events.parquet carries TIMESTAMP(NANOS) which Spark's
       // parquet reader rejects; read as raw Long ns and normalize in
       // Tables.events (truncate to µs, matching the DuckDB oracle).

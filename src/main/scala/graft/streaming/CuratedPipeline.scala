@@ -275,14 +275,6 @@ object CuratedPipeline {
       col("magMagnitude").as("MagMagnitude"),
       col("anomaly").as("Anomaly"))
 
-  /** Read the devices table's given columns, or an empty typed frame
-    * when the table does not exist yet. Only a genuinely ABSENT table
-    * falls back: any other read failure (corrupt file, transient FS
-    * error) PROPAGATES — both consumers ([[mergeDevices]]'s anti-join
-    * and [[enrichWithDevices]]'s left join) would otherwise silently
-    * treat the whole dimension as empty, re-inserting duplicate PKs
-    * resp. null-enriching every fact row. One definition so the guarded
-    * error set cannot drift between the two paths. */
   /** The devices dimension's schema (reference DDL, README.MD:159-165:
     * five NVARCHAR columns, deviceId PK). [[devicesOrEmpty]] derives
     * its absent-table fallback frame from THIS constant, so adding a
@@ -294,18 +286,31 @@ object CuratedPipeline {
         .map(n => org.apache.spark.sql.types.StructField(
           n, org.apache.spark.sql.types.StringType)))
 
-  private def devicesOrEmpty(spark: org.apache.spark.sql.SparkSession,
-      devicesDir: String, cols: Seq[String]): DataFrame =
-    try spark.read.parquet(devicesDir).select(cols.map(col): _*)
+  /** Read the devices table's given columns, or None when the table
+    * does not exist yet. Only a genuinely ABSENT table gives None: any
+    * other read failure (corrupt file, transient FS error) PROPAGATES —
+    * both consumers ([[mergeDevices]]'s anti-join and
+    * [[enrichWithDevices]]'s left join) would otherwise silently treat
+    * the whole dimension as empty, re-inserting duplicate PKs resp.
+    * null-enriching every fact row. One definition so the guarded
+    * error set cannot drift between the two paths. */
+  private def readDevices(spark: org.apache.spark.sql.SparkSession,
+      devicesDir: String, cols: Seq[String]): Option[DataFrame] =
+    try Some(spark.read.parquet(devicesDir).select(cols.map(col): _*))
     catch {
       case e: org.apache.spark.sql.AnalysisException
           if Set("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
-            .contains(e.getCondition) =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(
-            cols.map(n => DevicesSchema(n))))
+            .contains(e.getCondition) => None
     }
+
+  /** [[readDevices]], or an empty typed frame when the table is absent. */
+  private def devicesOrEmpty(spark: org.apache.spark.sql.SparkSession,
+      devicesDir: String, cols: Seq[String]): DataFrame =
+    readDevices(spark, devicesDir, cols).getOrElse(
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        org.apache.spark.sql.types.StructType(
+          cols.map(n => DevicesSchema(n)))))
 
   /** Devices-sink dedup-merge: at-most-one-row-per-device with
     * first-seen-wins (the PK semantics the reference gets from
@@ -322,23 +327,36 @@ object CuratedPipeline {
     * to the empty frame ([[devicesOrEmpty]]) — for
     * [[enrichWithDevices]] that means one batch of null metadata, not
     * lost fact rows, and the next batch re-reads the swapped table.
-    * The full-rewrite cost is bounded: the dimension is fleet-sized,
-    * orders of magnitude under the fact stream. */
+    *
+    * Cost: the batch's devices are anti-joined against a broadcast of
+    * the existing ids (the same fleet-sized side [[enrichWithDevices]]
+    * broadcasts). When the table exists and no id is new — every batch
+    * of a settled fleet — nothing is written. Only a batch that brings
+    * a new device pays the full rewrite, which stays bounded because
+    * the dimension is fleet-sized, orders of magnitude under the fact
+    * stream. */
   def mergeDevices(batch: DataFrame, devicesDir: String): Unit = {
     val spark = batch.sparkSession
     val cols = DevicesSchema.fieldNames.toSeq
-    val newDevs = batch
+    val batchDevs = batch
       .select(cols.map(col): _*)
       .filter(col("deviceId").isNotNull)
       .dropDuplicates("deviceId")
-    val existing = devicesOrEmpty(spark, devicesDir, cols)
-    // existing wins (first-seen): only genuinely new PKs join the table
-    val merged = existing.unionByName(
-      newDevs.join(existing.select("deviceId"), Seq("deviceId"), "left_anti"))
-    Maintenance.atomicSwap(spark, devicesDir, "devices-merge") { tmp =>
-      // the read of `existing` evaluates HERE, before any rename — the
-      // old table is still in place while the new copy materializes
-      merged.write.mode("overwrite").parquet(tmp)
+    val merged = readDevices(spark, devicesDir, cols) match {
+      case None => Some(batchDevs)
+      case Some(existing) =>
+        // existing wins (first-seen): only genuinely new PKs join the table
+        val fresh = batchDevs.join(broadcast(existing.select("deviceId")),
+          Seq("deviceId"), "left_anti")
+        if (fresh.isEmpty) None else Some(existing.unionByName(fresh))
+    }
+    merged.foreach { m =>
+      Maintenance.atomicSwap(spark, devicesDir, "devices-merge") { tmp =>
+        // the read of the existing table evaluates HERE, before any
+        // rename — the old table is still in place while the new copy
+        // materializes
+        m.write.mode("overwrite").parquet(tmp)
+      }
     }
   }
 

@@ -252,6 +252,31 @@ class CuratedPipelineSpec extends SparkSpec {
     assert(spark.read.parquet(dir).count() == 3)
   }
 
+  test("devices merge: a batch of only known devices leaves the table's files untouched") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("devnoop").toString + "/devices"
+    def batchOf(devs: String*) = CuratedPipeline.toPipeEvents(devs.map(d =>
+      rawJson(d, "2024-01-01T00:00:01Z", 90, 1010.0)).toDF("value")).toDF()
+    def files(): Map[String, Long] = {
+      val ls = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
+      try ls.toArray.map(_.asInstanceOf[java.nio.file.Path]).map(p =>
+        p.getFileName.toString ->
+          java.nio.file.Files.getLastModifiedTime(p).toMillis).toMap
+      finally ls.close()
+    }
+    CuratedPipeline.mergeDevices(batchOf("devA", "devB"), dir)
+    val before = files()
+    assert(before.keys.exists(_.endsWith(".parquet")))
+    Thread.sleep(20) // a rewrite inside the same millisecond could match mtimes
+    // known ids only, null ids alongside: no new device, so no rewrite
+    CuratedPipeline.mergeDevices(
+      batchOf("devB", "devA").unionByName(batchOf("devA")
+        .withColumn("deviceId", lit(null).cast("string"))), dir)
+    assert(files() == before)
+    assert(spark.read.parquet(dir).select("deviceId").as[String]
+      .collect().sorted.toSeq == Seq("devA", "devB"))
+  }
+
   test("device enrichment: broadcast left join, unknown devices survive, merges show up next call") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("devjoin").toString + "/devices"
