@@ -97,7 +97,7 @@ object CuratedPipeline {
   object SignalBuf { val empty: SignalBuf = SignalBuf(Vector.empty, Vector.empty) }
 
   /** Per-device anomaly state. `ver` pins the state schema version —
-    * checked on every restore by both the fMGWS and TWS routes; bump
+    * checked on every restore by [[anomalyStage]]; bump
     * [[DevState.Ver]] on any semantic change (see [[StateVersion]]). */
   final case class DevState(
       battery: SignalBuf, barometer: SignalBuf, accel: SignalBuf,
@@ -136,9 +136,8 @@ object CuratedPipeline {
       ).as[PipeEvent]
   }
 
-  /** One micro-batch's per-key fold — shared verbatim by both stateful
-    * APIs (`flatMapGroupsWithState` and `transformWithState`), so the
-    * two stages cannot drift.
+  /** One micro-batch's per-key fold, run by [[anomalyStage]] for each
+    * device group (and called directly by the specs).
     *
     * ASA's compat-1.2 reorder buffer delivers the window in event-time
     * order; we sort each micro-batch the same way before folding. Full
@@ -226,42 +225,6 @@ object CuratedPipeline {
     events
       .groupByKey(stateKey(perDevice))
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
-  }
-
-  /** The same stage on Spark 4's `transformWithState` API (typed state
-    * handles, RocksDB-backed store). The fold is shared with
-    * `anomalyStage`, so both emit identical results; this is the
-    * forward path as transformWithState replaces flatMapGroupsWithState.
-    * Streaming queries need `spark.sql.streaming.stateStore.providerClass`
-    * = RocksDBStateStoreProvider. */
-  final class SpikeAndDipProcessor(
-      params: SpikeAndDip.Params, adjustMillis: Option[Long])
-      extends org.apache.spark.sql.streaming.StatefulProcessor[String, PipeEvent, PipeOut] {
-    @transient private var state: org.apache.spark.sql.streaming.ValueState[DevState] = _
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      state = getHandle.getValueState[DevState]("devState",
-        org.apache.spark.sql.Encoders.product[DevState],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    override def handleInputRows(key: String, rows: Iterator[PipeEvent],
-        tv: org.apache.spark.sql.streaming.TimerValues): Iterator[PipeOut] = {
-      val st0 = Option(state.get()).getOrElse(DevState.empty)
-      StateVersion.check(st0.ver, DevState.Ver, "CuratedPipeline.anomalyStageTws")
-      val (out, st) = foldSorted(rows, st0, params, adjustMillis.map(_ * 1000L))
-      state.update(st)
-      out.iterator
-    }
-  }
-
-  def anomalyStageTws(events: Dataset[PipeEvent],
-      params: SpikeAndDip.Params = SpikeAndDip.Params(),
-      perDevice: Boolean = true,
-      adjustMillis: Option[Long] = None): Dataset[PipeOut] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(stateKey(perDevice))
-      .transformWithState(new SpikeAndDipProcessor(params, adjustMillis),
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append)
   }
 
   /** Curated Telemetry projection (DDL column names, README.MD:167-175;

@@ -2,10 +2,10 @@ package graft.streaming
 
 /** Loud state-schema versioning for the stateful streaming operators.
   *
-  * Every fMGWS/TWS state case class in this package carries a trailing
-  * `ver: Int` field whose value is pinned by a per-operator constant.
-  * On restore, the operator calls [[StateVersion.check]] before
-  * interpreting the decoded row. Two failure modes, both loud:
+  * Every `flatMapGroupsWithState` state case class in this package
+  * carries a trailing `ver: Int` field whose value is pinned by a
+  * per-operator constant. On restore, the operator calls
+  * [[StateVersion.check]] before interpreting the decoded row. Two failure modes, both loud:
   *
   *  - a checkpoint written by a build whose state class had a
   *    DIFFERENT field layout fails in Spark's state-store decoder

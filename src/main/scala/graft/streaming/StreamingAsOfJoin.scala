@@ -2,11 +2,9 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
-  GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues,
-  TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming as-of join — the unbounded execution surface of the as-of
   * contract (q54 union-and-window, q102 forward twin, q57 native
@@ -33,9 +31,8 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
   * the emitted answer exact for ANY arrival interleaving within
   * lateness (spec-pinned: adversarial slicings, rights arriving after
   * their probes). Probes with no key activity afterwards flush via the
-  * event-time TIMER (fMGWS `EventTimeTimeout` / TWS `registerTimer`),
-  * both surfaces driving ONE shared fold ([[advance]]) — the
-  * [[StreamingResample]] discipline.
+  * event-time `EventTimeTimeout`, which drives the same fold
+  * ([[advance]]) as input does — the [[StreamingResample]] discipline.
   *
   * Watermark contract (T3): rows on EITHER side arriving with ts ≤
   * watermark are dropped — the engine's own late-data filter on
@@ -67,17 +64,13 @@ object StreamingAsOfJoin extends Serializable {
   final case class ProbeRow(tsMs: Long, eid: Long)
 
   /** Whole-value state: both buffers are lateness-bounded (scaladoc
-    * above), so one value write per touched key beats per-entry map
-    * deltas here — the opposite trade to [[StreamingResample]]'s
-    * pending `MapState`. `armedMs` = the registered event-time timer
-    * (0 = none) so TWS re-arms are delta-only. */
+    * above), so the whole state is one value per key. */
   final case class JoinState(rights: List[RightRow], probes: List[ProbeRow],
-      armedMs: Long, ver: Int = JoinStateVer)
+      ver: Int = JoinStateVer)
 
   /** State-schema version, checked on every restore inside [[advance]]
-    * (covers both the fMGWS and TWS routes — see [[StateVersion]]);
-    * bump on any semantic change. */
-  final val JoinStateVer = 1
+    * (see [[StateVersion]]); bump on any semantic change. */
+  final val JoinStateVer = 2
 
   /** One emitted probe. `last_view_id`/`last_view_value` are None when
     * no right row precedes the probe; a matched right row with a NULL
@@ -97,7 +90,7 @@ object StreamingAsOfJoin extends Serializable {
       .as[Tagged]
   }
 
-  /** ONE fold for both stateful APIs: absorb `rows`, emit every probe
+  /** The join's fold: absorb `rows`, emit every probe
     * the watermark has passed, compact the right buffer to its
     * dominance frontier. Returns (new state — None ⟺ nothing left to
     * hold, emitted rows, timer to arm — None ⟺ nothing pending).
@@ -134,7 +127,7 @@ object StreamingAsOfJoin extends Serializable {
     val rights2 = dom.toList ::: rs.filter(_.tsMs > wmMs)
     val timer = keep.map(_.tsMs).minOption
     val st1 = if (rights2.isEmpty && keep.isEmpty) None
-      else Some(JoinState(rights2, keep, st0.map(_.armedMs).getOrElse(0L)))
+      else Some(JoinState(rights2, keep))
     (st1, out, timer)
   }
 
@@ -174,59 +167,5 @@ object StreamingAsOfJoin extends Serializable {
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout)(fn)
-  }
-
-  /** The same join on `transformWithState` — shares [[advance]]. */
-  final class AsOfProcessor(retireAfterMs: Option[Long] = None)
-      extends StatefulProcessor[Long, Tagged, AsOfMatch] {
-    @transient private var state: ValueState[JoinState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[JoinState]("asof",
-        Encoders.product[JoinState], TTLConfig.NONE)
-
-    private def run(key: Long, rows: Iterator[Tagged], wmMs: Long,
-        firedMs: Option[Long]): Iterator[AsOfMatch] = {
-      val st0 = (if (state.exists()) Some(state.get()) else None)
-        .map(s => if (firedMs.contains(s.armedMs)) s.copy(armedMs = 0L) else s)
-      val rs = rows.toSeq
-      val (st1, out, timer) = advance(key, st0, rs, wmMs)
-      if (firedMs.isDefined && rs.isEmpty && out.isEmpty
-          && st1.forall(_.probes.isEmpty) && retireAfterMs.isDefined) {
-        state.clear()
-        return Iterator.empty
-      }
-      val armed0 = st0.map(_.armedMs).getOrElse(0L)
-      val armed1 = timer.map(_ - 1)
-        .orElse(retireAfterMs.collect { case r if st1.isDefined => wmMs + r })
-        .getOrElse(0L)
-      if (armed1 != armed0) {
-        if (armed0 != 0L) getHandle.deleteTimer(armed0)
-        if (armed1 != 0L) getHandle.registerTimer(armed1)
-      }
-      st1 match {
-        case Some(s) => state.update(s.copy(armedMs = armed1))
-        case None => state.clear()
-      }
-      out.iterator
-    }
-
-    override def handleInputRows(key: Long, rows: Iterator[Tagged],
-        tv: TimerValues): Iterator[AsOfMatch] =
-      run(key, rows, tv.getCurrentWatermarkInMs(), None)
-
-    override def handleExpiredTimer(key: Long, tv: TimerValues,
-        info: ExpiredTimerInfo): Iterator[AsOfMatch] =
-      run(key, Iterator.empty, tv.getCurrentWatermarkInMs(),
-        Some(info.getExpiryTimeInMs))
-  }
-
-  def joinedTws(tagged: Dataset[Tagged], lateness: String = "0 seconds",
-      retireAfterMs: Option[Long] = None): Dataset[AsOfMatch] = {
-    import tagged.sparkSession.implicits._
-    tagged.withWatermark("ts", lateness)
-      .groupByKey(_.user_id)
-      .transformWithState(new AsOfProcessor(retireAfterMs),
-        TimeMode.EventTime(), OutputMode.Append)
   }
 }

@@ -59,10 +59,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *    A persistently hot bucket is the classic stop-band (boilerplate
   *    text); raise bands×rows-per-band, or pre-filter boilerplate —
   *    both corpus decisions, not engine ones.
-  *  - Production state hygiene: wire a TTL (GroupStateTimeout /
-  *    transformWithState timers) matched to the dedup horizon; the
-  *    default here is NoTimeout because the reference pipeline's
-  *    horizon is "ever seen".
+  *  - Production state hygiene: wire a TTL (a `GroupStateTimeout`)
+  *    matched to the dedup horizon; the default here is NoTimeout
+  *    because the reference pipeline's horizon is "ever seen".
   */
 object StreamingDedup {
 

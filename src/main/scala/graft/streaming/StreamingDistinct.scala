@@ -32,7 +32,7 @@ object StreamingDistinct extends Serializable {
 
   /** `nSeen` versions snapshots (total rows folded, not distincts).
     * `ver` is the state-schema version, checked on restore inside
-    * [[foldBatch]] — covers both routes (see [[StateVersion]]). */
+    * [[foldBatch]] (see [[StateVersion]]). */
   final case class DState(buf: HllBuf, nSeen: Long, ver: Int = DStateVer)
 
   final val DStateVer = 1
@@ -40,7 +40,8 @@ object StreamingDistinct extends Serializable {
   final case class Snapshot(key: String, n_seen: Long,
       distinct_est: Long, exact: Boolean)
 
-  /** ONE fold for both stateful APIs. */
+  /** One micro-batch's per-key fold: `HllAgg.reduce` over the batch,
+    * then the snapshot. */
   private def foldBatch(key: String, agg: HllAgg, prev: Option[DState],
       rows: Iterator[Obs]): (DState, Snapshot) = {
     val st0 = prev.getOrElse(DState(agg.zero, 0L))
@@ -66,34 +67,5 @@ object StreamingDistinct extends Serializable {
     in.groupByKey(_.key)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
-  }
-
-  /** The same stage on `transformWithState` — shares [[foldBatch]]. */
-  final class DistinctProcessor(p: Int, sparseMax: Int)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        String, Obs, Snapshot] {
-    private val agg = new HllAgg(p, sparseMax)
-    @transient private var state:
-      org.apache.spark.sql.streaming.ValueState[DState] = _
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      state = getHandle.getValueState[DState]("hllState",
-        org.apache.spark.sql.Encoders.product[DState],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    override def handleInputRows(key: String, rows: Iterator[Obs],
-        tv: org.apache.spark.sql.streaming.TimerValues): Iterator[Snapshot] = {
-      val (next, snap) = foldBatch(key, agg,
-        Option(state.get()), rows)
-      state.update(next)
-      Iterator.single(snap)
-    }
-  }
-
-  def trackTws(in: Dataset[Obs], p: Int = 12, sparseMax: Int = 4096)
-      : Dataset[Snapshot] = {
-    import in.sparkSession.implicits._
-    in.groupByKey(_.key)
-      .transformWithState(new DistinctProcessor(p, sparseMax),
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append)
   }
 }

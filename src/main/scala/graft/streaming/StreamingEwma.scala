@@ -3,11 +3,9 @@ package graft.streaming
 import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
-  GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues,
-  TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming EWMA — the unbounded execution surface of q112's dyadic
   * exponentially-weighted moving average (the EWMA control chart, the
@@ -38,8 +36,8 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
   * `retireAfterMs` bounds the idle-key history memory (the
   * round-5 resample ADVICE class): a key idle past the horizon drops
   * its state and restarts cold — a returning event scores like a new
-  * key. Both stateful APIs (`flatMapGroupsWithState` and
-  * `transformWithState`) drive the ONE shared fold [[advance]].
+  * key. The `flatMapGroupsWithState` stage [[scored]] drives the fold
+  * [[advance]] on input and on timer alike.
   */
 object StreamingEwma extends Serializable {
 
@@ -54,15 +52,13 @@ object StreamingEwma extends Serializable {
   final case class Obs(tsMs: Long, eid: Long, value: Double)
 
   /** `hist` is newest-first, already scored, length ≤ [[Lags]];
-    * `pending` holds rows the watermark has not released. `armedMs` =
-    * the registered event-time timer (0 = none) so TWS re-arms are
-    * delta-only. */
+    * `pending` holds rows the watermark has not released. */
   final case class EwmaState(hist: List[Obs], pending: List[Obs],
-      armedMs: Long, ver: Int = EwmaStateVer)
+      ver: Int = EwmaStateVer)
 
   /** State-schema version, checked on every restore inside [[advance]]
-    * (covers both routes — see [[StateVersion]]). */
-  final val EwmaStateVer = 1
+    * (see [[StateVersion]]). */
+  final val EwmaStateVer = 2
 
   /** `ewma` is None for a key's first event (no history — q112's NULL
     * row); `is_spike` mirrors q112's `value > 2·ewma`, 0 when there is
@@ -99,7 +95,7 @@ object StreamingEwma extends Serializable {
     }
   }
 
-  /** ONE fold for both stateful APIs: buffer arrivals, score and emit
+  /** The stage's fold: buffer arrivals, score and emit
     * every pending event the watermark has passed (in event-time
     * order, updating the ring as each emits), keep the rest. Returns
     * (new state — None ⟺ nothing left to hold, emitted rows, timer to
@@ -125,7 +121,7 @@ object StreamingEwma extends Serializable {
     }
     val timer = keep.map(_.tsMs).minOption
     val st1 = if (hist.isEmpty && keep.isEmpty) None
-      else Some(EwmaState(hist, keep, st0.map(_.armedMs).getOrElse(0L)))
+      else Some(EwmaState(hist, keep))
     (st1, out, timer)
   }
 
@@ -165,59 +161,5 @@ object StreamingEwma extends Serializable {
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout)(fn)
-  }
-
-  /** The same stage on `transformWithState` — shares [[advance]]. */
-  final class EwmaProcessor(retireAfterMs: Option[Long] = None)
-      extends StatefulProcessor[Long, Ev, EwmaOut] {
-    @transient private var state: ValueState[EwmaState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[EwmaState]("ewma",
-        Encoders.product[EwmaState], TTLConfig.NONE)
-
-    private def run(key: Long, rows: Iterator[Ev], wmMs: Long,
-        firedMs: Option[Long]): Iterator[EwmaOut] = {
-      val st0 = (if (state.exists()) Some(state.get()) else None)
-        .map(s => if (firedMs.contains(s.armedMs)) s.copy(armedMs = 0L) else s)
-      val rs = rows.toSeq
-      val (st1, out, timer) = advance(key, st0, rs, wmMs)
-      if (firedMs.isDefined && rs.isEmpty && out.isEmpty
-          && st1.forall(_.pending.isEmpty) && retireAfterMs.isDefined) {
-        state.clear()
-        return Iterator.empty
-      }
-      val armed0 = st0.map(_.armedMs).getOrElse(0L)
-      val armed1 = timer.map(_ - 1)
-        .orElse(retireAfterMs.collect { case r if st1.isDefined => wmMs + r })
-        .getOrElse(0L)
-      if (armed1 != armed0) {
-        if (armed0 != 0L) getHandle.deleteTimer(armed0)
-        if (armed1 != 0L) getHandle.registerTimer(armed1)
-      }
-      st1 match {
-        case Some(s) => state.update(s.copy(armedMs = armed1))
-        case None => state.clear()
-      }
-      out.iterator
-    }
-
-    override def handleInputRows(key: Long, rows: Iterator[Ev],
-        tv: TimerValues): Iterator[EwmaOut] =
-      run(key, rows, tv.getCurrentWatermarkInMs(), None)
-
-    override def handleExpiredTimer(key: Long, tv: TimerValues,
-        info: ExpiredTimerInfo): Iterator[EwmaOut] =
-      run(key, Iterator.empty, tv.getCurrentWatermarkInMs(),
-        Some(info.getExpiryTimeInMs))
-  }
-
-  def scoredTws(evs: Dataset[Ev], lateness: String = "0 seconds",
-      retireAfterMs: Option[Long] = None): Dataset[EwmaOut] = {
-    import evs.sparkSession.implicits._
-    evs.withWatermark("ts", lateness)
-      .groupByKey(_.user_id)
-      .transformWithState(new EwmaProcessor(retireAfterMs),
-        TimeMode.EventTime(), OutputMode.Append)
   }
 }

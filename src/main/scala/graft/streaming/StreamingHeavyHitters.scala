@@ -42,7 +42,7 @@ object StreamingHeavyHitters extends Serializable {
 
   /** Per-group state: the Misra–Gries buffer + total items folded.
     * `ver` is the state-schema version, checked on restore inside
-    * [[foldBatch]] — covers both routes (see [[StateVersion]]). */
+    * [[foldBatch]] (see [[StateVersion]]). */
   final case class HHState(counts: Map[String, Long], n_seen: Long,
       ver: Int = HHStateVer)
 
@@ -63,10 +63,8 @@ object StreamingHeavyHitters extends Serializable {
       .as[Tok]
   }
 
-  /** ONE fold for both stateful APIs (fMGWS and transformWithState) —
-    * the same definition-sharing discipline as the anomaly stage
-    * (`CuratedPipeline.anomalyStage`/`anomalyStageTws`), so the two
-    * surfaces cannot drift. */
+  /** One micro-batch's per-group fold: Misra–Gries `reduce` over the
+    * batch in (doc_id, pos) order, then the full sketch snapshot. */
   private def foldBatch(lang: String, prev: HHState, rows: Iterator[Tok],
       k: Int): (HHState, Iterator[Estimate]) = {
     StateVersion.check(prev.ver, HHStateVer, "StreamingHeavyHitters.sketch")
@@ -95,42 +93,7 @@ object StreamingHeavyHitters extends Serializable {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
   }
 
-  /** The same stage on Spark 4's `transformWithState` API (typed state
-    * handles, RocksDB-backed store) — the forward path as TWS replaces
-    * flatMapGroupsWithState; shares [[foldBatch]] with [[sketch]], so
-    * both emit identical snapshots (spec-pinned). Streaming queries
-    * need the RocksDB state-store provider. */
-  final class HeavyHittersProcessor(k: Int)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        String, Tok, Estimate] {
-    @transient private var state:
-      org.apache.spark.sql.streaming.ValueState[HHState] = _
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      state = getHandle.getValueState[HHState]("hhState",
-        org.apache.spark.sql.Encoders.product[HHState],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    override def handleInputRows(key: String, rows: Iterator[Tok],
-        tv: org.apache.spark.sql.streaming.TimerValues): Iterator[Estimate] = {
-      val prev = Option(state.get()).getOrElse(HHState(Map.empty, 0L))
-      val (next, out) = foldBatch(key, prev, rows, k)
-      state.update(next)
-      out
-    }
-  }
-
-  def sketchTws(in: Dataset[Tok], k: Int): Dataset[Estimate] = {
-    import in.sparkSession.implicits._
-    in.groupByKey(_.lang)
-      .transformWithState(new HeavyHittersProcessor(k),
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append)
-  }
-
   /** Convenience: docs(doc_id, lang, text) → sketch snapshots. */
   def sketchDocs(docs: DataFrame, k: Int): Dataset[Estimate] =
     sketch(tokens(docs), k)
-
-  /** [[sketchDocs]] through the transformWithState surface. */
-  def sketchDocsTws(docs: DataFrame, k: Int): Dataset[Estimate] =
-    sketchTws(tokens(docs), k)
 }

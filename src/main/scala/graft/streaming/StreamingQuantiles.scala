@@ -49,8 +49,8 @@ object StreamingQuantiles extends Serializable {
   /** One snapshot row (versioned by n_seen). */
   final case class Snapshot(key: String, n_seen: Long, qs: Seq[Double])
 
-  /** ONE fold for both stateful APIs — the anomaly-stage /
-    * heavy-hitters definition-sharing discipline. */
+  /** One micro-batch's per-group fold: insert the batch in (doc_id, seq)
+    * order and snapshot the quantiles. */
   private def foldBatch(key: String, prev: QState, rows: Iterator[Obs],
       capacity: Int, quantiles: Seq[Double]): (QState, Snapshot) = {
     val batch = rows.toSeq.sortBy(o => (o.doc_id, o.seq))
@@ -74,36 +74,6 @@ object StreamingQuantiles extends Serializable {
     }
     in.groupByKey(_.key)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
-  }
-
-  /** The same stage on the `transformWithState` API (typed state
-    * handles, RocksDB-backed) — shares [[foldBatch]] with [[track]]. */
-  final class QuantileProcessor(capacity: Int, quantiles: Seq[Double])
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        String, Obs, Snapshot] {
-    @transient private var state:
-      org.apache.spark.sql.streaming.ValueState[VQState] = _
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      state = getHandle.getValueState[VQState]("qState",
-        org.apache.spark.sql.Encoders.product[VQState],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    override def handleInputRows(key: String, rows: Iterator[Obs],
-        tv: org.apache.spark.sql.streaming.TimerValues): Iterator[Snapshot] = {
-      val prev = Option(state.get()).getOrElse(VQState(QuantileSketch.empty))
-      StateVersion.check(prev.ver, VQStateVer, "StreamingQuantiles.trackTws")
-      val (next, snap) = foldBatch(key, prev.sk, rows, capacity, quantiles)
-      state.update(VQState(next))
-      Iterator.single(snap)
-    }
-  }
-
-  def trackTws(in: Dataset[Obs], capacity: Int, quantiles: Seq[Double])
-      : Dataset[Snapshot] = {
-    import in.sparkSession.implicits._
-    in.groupByKey(_.key)
-      .transformWithState(new QuantileProcessor(capacity, quantiles),
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append)
   }
 
   /** Convenience: per-lang doc-length percentiles over a

@@ -2,10 +2,8 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
-  GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues,
-  TTLConfig, ValueState}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Incremental (streaming) gap-fill + LOCF resampling — the cross-batch
   * twin of q107 (`relational/EventOps`): per user, one row per hour from
@@ -16,9 +14,8 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
   * op emits only when input arrives; a gap-filler's whole point is to
   * emit WHEN NOTHING ARRIVES, so finalization is driven by the
   * event-time watermark passing an hour boundary — `flatMapGroupsWithState`
-  * arms its `EventTimeTimeout` and `transformWithState` registers an
-  * event-time timer (`handleExpiredTimer`), both over ONE shared fold
-  * ([[advance]]), the anomaly-stage definition-sharing discipline.
+  * arms its `EventTimeTimeout`, and input and timer drive the same fold
+  * ([[advance]]).
   *
   * Contract (batch-q107 parity, spec-pinned):
   *  - an hour finalizes once the watermark passes its end AND the state
@@ -38,8 +35,7 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
   * Scale: state per user is the LOCF cursor plus one entry per
   * not-yet-finalized hour — bounded by the lateness window, not the
   * stream length; the shuffle is the user-keyed exchange the batch
-  * rendering uses. The TWS twin keeps pending hours in `MapState`
-  * (per-entry RocksDB updates, no full-map rewrite per batch).
+  * rendering uses.
   */
 object StreamingResample extends Serializable {
   private val HourMs = 3600000L
@@ -49,26 +45,24 @@ object StreamingResample extends Serializable {
   final case class HourRow(user_id: Long, hr: Timestamp, n_events: Long,
       is_gap: Int, v: Double)
 
-  /** LOCF cursor: next hour to finalize, the carried value, whether any
-    * hour has been emitted yet, and the armed event-time timer (0 =
-    * none) so re-arms are delta-only. */
+  /** LOCF cursor: next hour to finalize, the carried value, and whether
+    * any hour has been emitted yet. */
   final case class Cursor(hourMs: Long, locf: Double, hasEmitted: Boolean,
-      armedMs: Long, ver: Int = CursorVer)
+      ver: Int = CursorVer)
 
-  /** State-schema version: the cursor rides inside the fMGWS
-    * [[FillState]] AND is the TWS value-state, so checking it inside
-    * [[advance]] covers both routes (see [[StateVersion]]). */
-  final val CursorVer = 1
+  /** State-schema version: the cursor rides inside [[FillState]], so
+    * checking it inside [[advance]] covers the whole state (see
+    * [[StateVersion]]). */
+  final val CursorVer = 2
 
   /** Per-open-hour aggregate: count plus the max-(ts, event_id) value —
     * the same deterministic in-hour pick as batch q107's `max_by`. */
   final case class HourAgg(n: Long, tsMs: Long, eid: Long, v: Double)
 
-  /** fMGWS single-value state (TWS splits cursor/pending across typed
-    * handles instead). */
+  /** The stage's single-value state: cursor plus open hours. */
   final case class FillState(cursor: Cursor, pending: Map[Long, HourAgg])
 
-  /** ONE fold for both stateful APIs: apply `rows`, then finalize every
+  /** The stage's fold: apply `rows`, then finalize every
     * hour the watermark has passed while later-or-equal activity remains
     * pending. Returns the new cursor (None ⟺ still no data), the
     * surviving pending hours, the rows to emit (hour order), and the
@@ -82,7 +76,7 @@ object StreamingResample extends Serializable {
     if (cursor0.isEmpty && sorted.isEmpty)
       return (None, pending0, Nil, None)
     var cur = cursor0.getOrElse(
-      Cursor(floorHour(sorted.head.ts.getTime), 0.0, hasEmitted = false, 0L))
+      Cursor(floorHour(sorted.head.ts.getTime), 0.0, hasEmitted = false))
     var pending = pending0
     sorted.foreach { e =>
       val h = floorHour(e.ts.getTime)
@@ -112,7 +106,7 @@ object StreamingResample extends Serializable {
       out += HourRow(key, new Timestamp(cur.hourMs),
         agg.map(_.n).getOrElse(0L), if (agg.isEmpty) 1 else 0, locf)
       pending -= cur.hourMs
-      cur = Cursor(cur.hourMs + HourMs, locf, hasEmitted = true, cur.armedMs)
+      cur = Cursor(cur.hourMs + HourMs, locf, hasEmitted = true)
     }
     val timer = if (pending.nonEmpty) Some(cur.hourMs + HourMs) else None
     (Some(cur), pending, out.result(), timer)
@@ -176,80 +170,5 @@ object StreamingResample extends Serializable {
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout)(fn)
-  }
-
-  /** The same stage on `transformWithState` — shares [[advance]]; pending
-    * hours live in `MapState` so RocksDB writes are per-entry deltas.
-    * `retireAfterMs` mirrors [[fill]]'s cursor retirement (an explicit
-    * event-time timer, NOT `TTLConfig`: TTL is wall-clock-based, which
-    * would retire nondeterministically under replay and diverge the two
-    * surfaces' semantics). */
-  final class ResampleProcessor(retireAfterMs: Option[Long] = None)
-      extends StatefulProcessor[Long, Ev, HourRow] {
-    @transient private var cursorState: ValueState[Cursor] = _
-    @transient private var pendingState:
-      org.apache.spark.sql.streaming.MapState[Long, HourAgg] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      cursorState = getHandle.getValueState[Cursor]("cursor",
-        Encoders.product[Cursor], TTLConfig.NONE)
-      pendingState = getHandle.getMapState[Long, HourAgg]("pending",
-        Encoders.scalaLong, Encoders.product[HourAgg], TTLConfig.NONE)
-    }
-
-    private def run(key: Long, rows: Iterator[Ev], wmMs: Long,
-        firedMs: Option[Long]): Iterator[HourRow] = {
-      val cur0 = (if (cursorState.exists()) Some(cursorState.get()) else None)
-        // the fired timer is gone; forget it so re-arming is clean
-        .map(c => if (firedMs.contains(c.armedMs)) c.copy(armedMs = 0L) else c)
-      val pending0 = pendingState.iterator().map { case (k, v) => k -> v }.toMap
-      val rs = rows.toSeq
-      val (cur, pending, out, timer) =
-        advance(key, cur0, pending0, rs, wmMs)
-      // fired timer + no input + nothing finalized + nothing pending ⟺
-      // the RETIREMENT timer (same discrimination as the fMGWS path):
-      // drop all state for this user
-      if (firedMs.isDefined && rs.isEmpty && out.isEmpty && pending.isEmpty
-          && retireAfterMs.isDefined) {
-        cursorState.clear(); pendingState.clear()
-        return Iterator.empty
-      }
-      // per-entry delta writes: finalized hours leave, touched hours update
-      (pending0.keySet -- pending.keySet).foreach(pendingState.removeKey)
-      pending.foreach { case (k, v) =>
-        if (!pending0.get(k).contains(v)) pendingState.updateValue(k, v)
-      }
-      // same strict-fire guard as the fMGWS path: arm end−1 so a
-      // watermark landing exactly on the hour boundary still fires;
-      // with nothing pending, arm the retirement horizon instead
-      val armed0 = cur0.map(_.armedMs).getOrElse(0L)
-      val armed1 = timer.map(_ - 1)
-        .orElse(retireAfterMs.collect { case r if cur.isDefined => wmMs + r })
-        .getOrElse(0L)
-      if (armed1 != armed0) {
-        if (armed0 != 0L) getHandle.deleteTimer(armed0)
-        if (armed1 != 0L) getHandle.registerTimer(armed1)
-      }
-      cur.foreach(c => cursorState.update(c.copy(armedMs = armed1)))
-      out.iterator
-    }
-
-    override def handleInputRows(key: Long, rows: Iterator[Ev],
-        tv: TimerValues): Iterator[HourRow] =
-      run(key, rows, tv.getCurrentWatermarkInMs(), None)
-
-    override def handleExpiredTimer(key: Long, tv: TimerValues,
-        info: ExpiredTimerInfo): Iterator[HourRow] =
-      run(key, Iterator.empty, tv.getCurrentWatermarkInMs(),
-        Some(info.getExpiryTimeInMs))
-  }
-
-  def fillTws(ds: Dataset[Ev], lateness: String = "0 seconds",
-      retireAfterMs: Option[Long] = None): Dataset[HourRow] = {
-    import ds.sparkSession.implicits._
-    ds.withWatermark("ts", lateness)
-      .groupByKey(_.user_id)
-      .transformWithState(new ResampleProcessor(retireAfterMs),
-        TimeMode.EventTime(), OutputMode.Append)
   }
 }

@@ -309,24 +309,6 @@ class CuratedPipelineSpec extends SparkSpec {
     assert(next.filter(col("templateId").isNotNull).count() == 3)
   }
 
-  test("transformWithState stage emits identical results to flatMapGroupsWithState") {
-    import spark.implicits._
-    val events = (0 until 60).map { i =>
-      val dev = s"dev${i % 3}"
-      val v = if (i == 45) 8888L else 100L + (i % 5)
-      rawJson(dev, f"2024-01-01T00:00:${i / 3}%02d.${i % 3}%03dZ", v, 1013.0)
-    }
-    val pipe = CuratedPipeline.toPipeEvents(events.toDF("value"))
-    def collect(ds: org.apache.spark.sql.Dataset[CuratedPipeline.PipeOut]) =
-      ds.select("deviceId", "enqueuedTime", "anomaly").collect()
-        .map(r => (r.getString(0), r.getTimestamp(1).getTime) -> r.getInt(2)).toMap
-    val viaFmgws = collect(CuratedPipeline.anomalyStage(pipe))
-    val viaTws = collect(CuratedPipeline.anomalyStageTws(pipe))
-    assert(viaTws.size == 60)
-    assert(viaTws == viaFmgws)
-    assert(viaTws.values.sum >= 1) // the injected spike was flagged by both
-  }
-
   test("checkpoint recovery: anomaly state survives a query restart") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("recov").toString

@@ -7,8 +7,8 @@ import graft.streaming.StateVersion.StateVersionMismatchException
   * every stateful streaming operator's state case class carries a
   * `ver` field, and restoring a row whose version differs from the one
   * this build writes raises the NAMED error instead of a silent
-  * misread. The fold/advance functions ARE the restore paths (both the
-  * fMGWS and TWS surfaces route through them), so handing them a
+  * misread. The fold/advance functions ARE the restore paths (every
+  * `flatMapGroupsWithState` stage routes through them), so handing them a
   * wrong-version state exercises exactly the code a real checkpoint
   * restore runs. */
 class StateVersionSpec extends SparkSpec {
@@ -26,7 +26,7 @@ class StateVersionSpec extends SparkSpec {
   }
 
   test("as-of join refuses a wrong-version restored state") {
-    val bad = StreamingAsOfJoin.JoinState(Nil, Nil, 0L, ver = 99)
+    val bad = StreamingAsOfJoin.JoinState(Nil, Nil, ver = 99)
     val e = intercept[StateVersionMismatchException] {
       StreamingAsOfJoin.advance(1L, Some(bad), Nil, 0L)
     }
@@ -34,14 +34,14 @@ class StateVersionSpec extends SparkSpec {
   }
 
   test("ewma refuses a wrong-version restored state") {
-    val bad = StreamingEwma.EwmaState(Nil, Nil, 0L, ver = 0)
+    val bad = StreamingEwma.EwmaState(Nil, Nil, ver = 0)
     intercept[StateVersionMismatchException] {
       StreamingEwma.advance(1L, Some(bad), Nil, 0L)
     }
   }
 
   test("gap-fill refuses a wrong-version restored cursor") {
-    val bad = StreamingResample.Cursor(0L, 0.0, hasEmitted = false, 0L,
+    val bad = StreamingResample.Cursor(0L, 0.0, hasEmitted = false,
       ver = -1)
     intercept[StateVersionMismatchException] {
       StreamingResample.advance(1L, Some(bad), Map.empty, Nil, 0L)
@@ -51,10 +51,10 @@ class StateVersionSpec extends SparkSpec {
   test("current-version states restore cleanly through the same paths") {
     // defaults carry the current version: the happy path is untouched
     val (st, out, timer) = StreamingAsOfJoin.advance(1L,
-      Some(StreamingAsOfJoin.JoinState(Nil, Nil, 0L)), Nil, 0L)
+      Some(StreamingAsOfJoin.JoinState(Nil, Nil)), Nil, 0L)
     assert(st.isEmpty && out.isEmpty && timer.isEmpty)
     val (st2, out2, _) = StreamingEwma.advance(1L,
-      Some(StreamingEwma.EwmaState(Nil, Nil, 0L)), Nil, 0L)
+      Some(StreamingEwma.EwmaState(Nil, Nil)), Nil, 0L)
     assert(st2.isEmpty && out2.isEmpty)
   }
 

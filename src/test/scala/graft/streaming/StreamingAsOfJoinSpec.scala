@@ -9,8 +9,8 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 /** Streaming as-of semantics: watermark-delayed emission makes the
   * answer exact under ANY arrival interleaving within lateness,
   * probes with no later key activity flush via the event-time timer,
-  * the right buffer compacts to its dominance frontier, and both
-  * stateful APIs emit identical rows from the one shared fold. */
+  * the right buffer compacts to its dominance frontier, and the
+  * sliced-timer answers hold on the RocksDB state store too. */
 class StreamingAsOfJoinSpec extends SparkSpec {
   import StreamingAsOfJoin.{advance, AsOfMatch, JoinState, ProbeRow, RightRow, Tagged}
 
@@ -109,14 +109,14 @@ class StreamingAsOfJoinSpec extends SparkSpec {
       Set((1L, 201L, Some(11L), Some(1.0))))
   }
 
-  test("transformWithState twin emits identical rows (shared fold, timers, RocksDB)") {
+  test("sliced timers emit the same rows under the RocksDB state store") {
     withRocksDBStateStore {
       val sliced = Seq(
         Seq(buy(1L, 101L, 10), buy(1L, 100L, 5), buy(1L, 102L, 25)),
         Seq(view(1L, 12L, 10, Some(2.0)), buy(1L, 103L, 40)),
         Seq(view(1L, 11L, 10, Some(1.0)), view(1L, 13L, 20, None))) ++ mules
-      val got = run("asof_tws",
-        StreamingAsOfJoin.joinedTws(_, lateness = "60 minutes"), sliced)
+      val got = run("asof_rocks",
+        StreamingAsOfJoin.joined(_, lateness = "60 minutes"), sliced)
       assert(got.filter(_._1 == 1L) === expected1)
     }
   }
@@ -146,7 +146,7 @@ class StreamingAsOfJoinSpec extends SparkSpec {
     }
     // pending probe keeps its timer armed at ts−1
     val (st2, out2, timer2) = advance(1L,
-      Some(JoinState(List(RightRow(20 * M, 13L, None)), Nil, 0L)),
+      Some(JoinState(List(RightRow(20 * M, 13L, None)), Nil)),
       Seq(buy(1L, 103L, 40)), 30 * M)
     assert(out2.isEmpty && timer2 === Some(40 * M))
     assert(st2.get.probes === List(ProbeRow(40 * M, 103L)))

@@ -6,9 +6,10 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** Streaming HLL distinct counting: the sparse-exact regime equals
   * `count(DISTINCT)` cross-batch, arrival slicing never changes a
-  * snapshot (HLL's merge identity needs no ordering contract), both
-  * stateful APIs share the fold, and dense-regime state stays bounded
-  * while the estimate stays inside the rsd envelope. */
+  * snapshot (HLL's merge identity needs no ordering contract), the
+  * RocksDB state store restores the same buffer as the in-memory one,
+  * and dense-regime state stays bounded while the estimate stays inside
+  * the rsd envelope. */
 class StreamingDistinctSpec extends SparkSpec {
   import StreamingDistinct.{Obs, Snapshot}
 
@@ -49,16 +50,16 @@ class StreamingDistinctSpec extends SparkSpec {
     assert(a.n_seen === b.n_seen && a.exact === b.exact)
   }
 
-  test("transformWithState twin emits identical snapshots (shared fold, RocksDB)") {
-    withRocksDBStateStore {
-      val batches = Seq(
-        (0L until 150L).map(x => Obs("dev", x)),
-        (100L until 260L).map(x => Obs("dev", x)))
-      val a = latest(run("sd_fm", StreamingDistinct.track(_), batches))("dev")
-      val b = latest(run("sd_tws", StreamingDistinct.trackTws(_), batches))("dev")
-      assert(a === b)
-      assert(a.distinct_est === 260L && a.exact)
+  test("RocksDB state store emits the same snapshots as the in-memory one") {
+    val batches = Seq(
+      (0L until 150L).map(x => Obs("dev", x)),
+      (100L until 260L).map(x => Obs("dev", x)))
+    val a = latest(run("sd_mem", StreamingDistinct.track(_), batches))("dev")
+    val b = withRocksDBStateStore {
+      latest(run("sd_rocks", StreamingDistinct.track(_), batches))("dev")
     }
+    assert(a === b)
+    assert(a.distinct_est === 260L && a.exact)
   }
 
   test("dense regime: state bounded, estimate inside the rsd envelope, exact=false") {

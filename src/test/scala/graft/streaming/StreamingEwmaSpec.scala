@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * batch q112 window BIT-FOR-BIT under any arrival interleaving within
   * lateness, history survives micro-batch boundaries, late rows drop
   * and never perturb already-final scores, the ring state is bounded
-  * at Lags observations, and both stateful APIs emit identical rows
-  * from the one shared fold. */
+  * at Lags observations, and out-of-order slices score the same on the
+  * RocksDB state store. */
 class StreamingEwmaSpec extends SparkSpec {
   import StreamingEwma.{advance, Ev, EwmaOut, EwmaState, Obs}
 
@@ -114,11 +114,11 @@ class StreamingEwmaSpec extends SparkSpec {
       Seq(ev(1L, 101L, 10, 4.0), ev(1L, 102L, 70, 8.0))))
   }
 
-  test("transformWithState twin emits identical rows (shared fold, RocksDB)") {
+  test("out-of-order slices match batch under the RocksDB state store") {
     withRocksDBStateStore {
       val sliced = Seq(u1Rows.drop(10).reverse, u1Rows.take(10)) ++ mules
-      val got = run("ewma_tws",
-        StreamingEwma.scoredTws(_, lateness = "300 minutes"), sliced)
+      val got = run("ewma_rocks",
+        StreamingEwma.scored(_, lateness = "300 minutes"), sliced)
       assert(u1(got) === batchExpected(u1Rows))
     }
   }

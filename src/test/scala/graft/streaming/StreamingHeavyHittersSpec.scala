@@ -83,32 +83,6 @@ class StreamingHeavyHittersSpec extends SparkSpec {
     }
   }
 
-  test("transformWithState twin emits identical snapshots (shared fold, RocksDB store)") {
-    val sp = spark
-    import sp.implicits._
-    withRocksDBStateStore {
-      val b1 = Seq(doc(1, "en", "a", "b", "a"), doc(2, "fr", "x"))
-      val b2 = Seq(doc(3, "en", "b", "c"))
-      def run(name: String,
-          stage: org.apache.spark.sql.DataFrame => org.apache.spark.sql.Dataset[Estimate])
-          : Set[(String, Long, String, Long)] = {
-        val input = MemoryStream[(Long, String, String)](sp)
-        val q = stage(input.toDF.toDF("doc_id", "lang", "text"))
-          .writeStream.format("memory").queryName(name).start()
-        try {
-          input.addData(b1: _*); q.processAllAvailable()
-          input.addData(b2: _*); q.processAllAvailable()
-          sp.table(name).as[Estimate].collect()
-            .map(e => (e.lang, e.n_seen, e.term, e.est)).toSet
-        } finally q.stop()
-      }
-      val viaFmgws = run("hh_tw_a", StreamingHeavyHitters.sketchDocs(_, k = 4))
-      val viaTws = run("hh_tw_b", StreamingHeavyHitters.sketchDocsTws(_, k = 4))
-      assert(viaTws === viaFmgws)
-      assert(viaTws.nonEmpty)
-    }
-  }
-
   test("lossy regime across batches: underestimate ≤ n/(k+1), heavy hitters survive") {
     val sp = spark
     import sp.implicits._

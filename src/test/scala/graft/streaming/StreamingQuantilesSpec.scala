@@ -34,33 +34,28 @@ class StreamingQuantilesSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("transformWithState twin emits identical snapshots (shared fold, RocksDB store)") {
+  test("two-batch snapshots are the same on the RocksDB and in-memory state stores") {
     val sp = spark
     import sp.implicits._
-    withRocksDBStateStore {
-      val b1 = (1 to 40).map(i => ("en", i.toLong, 0, i.toDouble))
-      val b2 = (41 to 70).map(i => ("en", i.toLong, 0, i.toDouble))
-      def run(name: String,
-          stage: org.apache.spark.sql.Dataset[Obs] =>
-            org.apache.spark.sql.Dataset[Snapshot])
-          : Set[(String, Long, Seq[Double])] = {
-        val input = MemoryStream[(String, Long, Int, Double)](sp)
-        val q = stage(input.toDF.toDF("key", "doc_id", "seq", "x").as[Obs])
-          .writeStream.format("memory").queryName(name).start()
-        try {
-          input.addData(b1: _*); q.processAllAvailable()
-          input.addData(b2: _*); q.processAllAvailable()
-          sp.table(name).as[Snapshot].collect()
-            .map(s => (s.key, s.n_seen, s.qs)).toSet
-        } finally q.stop()
-      }
-      val viaFmgws = run("sq_tw_a",
-        StreamingQuantiles.track(_, 1 << 10, Seq(0.5, 0.9)))
-      val viaTws = run("sq_tw_b",
-        StreamingQuantiles.trackTws(_, 1 << 10, Seq(0.5, 0.9)))
-      assert(viaTws === viaFmgws)
-      assert(viaTws.nonEmpty)
+    val b1 = (1 to 40).map(i => ("en", i.toLong, 0, i.toDouble))
+    val b2 = (41 to 70).map(i => ("en", i.toLong, 0, i.toDouble))
+    def run(name: String): Set[(String, Long, Seq[Double])] = {
+      val input = MemoryStream[(String, Long, Int, Double)](sp)
+      val q = StreamingQuantiles.track(
+          input.toDF.toDF("key", "doc_id", "seq", "x").as[Obs],
+          1 << 10, Seq(0.5, 0.9))
+        .writeStream.format("memory").queryName(name).start()
+      try {
+        input.addData(b1: _*); q.processAllAvailable()
+        input.addData(b2: _*); q.processAllAvailable()
+        sp.table(name).as[Snapshot].collect()
+          .map(s => (s.key, s.n_seen, s.qs)).toSet
+      } finally q.stop()
     }
+    val inMemory = run("sq_mem")
+    val rocks = withRocksDBStateStore(run("sq_rocks"))
+    assert(rocks === inMemory)
+    assert(rocks.nonEmpty)
   }
 
   test("lossy regime: rank bound holds across batches; state stays bounded") {

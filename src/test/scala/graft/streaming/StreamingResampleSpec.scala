@@ -9,8 +9,8 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 /** Timer-driven gap-fill semantics: hours finalize when the WATERMARK
   * passes them (not when the next event happens to arrive), gap rows
   * carry the LOCF value, trailing hours stay open, in-lateness early
-  * arrivals extend the grid downward, and both stateful APIs emit the
-  * same rows from the one shared fold. */
+  * arrivals extend the grid downward, and the timers and retirement
+  * behave the same on the RocksDB state store. */
 class StreamingResampleSpec extends SparkSpec {
   import StreamingResample.{Ev, HourRow}
 
@@ -64,9 +64,9 @@ class StreamingResampleSpec extends SparkSpec {
     assert(got.forall(_._1 == 7L), "trailing hours must not emit")
   }
 
-  test("transformWithState twin emits identical rows (shared fold, timers, RocksDB)") {
+  test("the trailing hour's timer fires under the RocksDB state store") {
     withRocksDBStateStore {
-      val got = run("rs_tws", StreamingResample.fillTws(_), scenario)
+      val got = run("rs_rocks", StreamingResample.fill(_), scenario)
       assert(got.filter(_._1 == 7L) === expected7)
       assert(got.forall(_._1 == 7L))
     }
@@ -92,18 +92,14 @@ class StreamingResampleSpec extends SparkSpec {
     // the armed timestamp; the stage arms end−1 so a watermark that
     // stops exactly at the boundary (common with on-the-hour events)
     // still emits — without that, this trailing hour would hang forever
-    for ((nm, stage) <- Seq(
-        ("rs_edge_f", StreamingResample.fill(_: Dataset[Ev])),
-        ("rs_edge_t", StreamingResample.fillTws(_: Dataset[Ev])))) {
-      val got = withRocksDBStateStore {
-        run(nm, stage, Seq(
-          Seq((11L, 1L, ts(4, 10), 5.0)),
-          Seq((99L, 2L, ts(5), 0.0)), // watermark becomes exactly 05:00:00.000
-          Seq((99L, 3L, ts(5), 0.0))))
-      }
-      assert(got.filter(_._1 == 11L) === Set((11L, 4 * H, 1L, 0, 5.0)),
-        s"$nm must finalize the hour at an exact-boundary watermark")
+    val got = withRocksDBStateStore {
+      run("rs_edge_f", StreamingResample.fill(_), Seq(
+        Seq((11L, 1L, ts(4, 10), 5.0)),
+        Seq((99L, 2L, ts(5), 0.0)), // watermark becomes exactly 05:00:00.000
+        Seq((99L, 3L, ts(5), 0.0))))
     }
+    assert(got.filter(_._1 == 11L) === Set((11L, 4 * H, 1L, 0, 5.0)),
+      "the stage must finalize the hour at an exact-boundary watermark")
   }
 
   test("one-shot replay of the whole stream matches the multi-batch rows") {
@@ -130,13 +126,12 @@ class StreamingResampleSpec extends SparkSpec {
 
   test("cursor retirement drops idle users' state; a return starts a fresh grid (both surfaces)") {
     val retired = Set((7L, 1 * H, 1L, 0, 1.0), (7L, 6 * H, 1L, 0, 9.0))
-    for ((nm, stage) <- Seq[(String, Dataset[Ev] => Dataset[HourRow])](
-        ("rs_ret_f", StreamingResample.fill(_, retireAfterMs = Some(H))),
-        ("rs_ret_t", StreamingResample.fillTws(_, retireAfterMs = Some(H))))) {
-      val got = withRocksDBStateStore { run(nm, stage, retireScenario) }
-      assert(got.filter(_._1 == 7L) === retired,
-        s"$nm: idle-span gap rows must NOT appear after retirement")
+    val got = withRocksDBStateStore {
+      run("rs_ret_f", StreamingResample.fill(_, retireAfterMs = Some(H)),
+        retireScenario)
     }
+    assert(got.filter(_._1 == 7L) === retired,
+      "idle-span gap rows must NOT appear after retirement")
     // control: without retirement the idle span IS gap-filled with LOCF
     val kept = run("rs_ret_ctl", StreamingResample.fill(_), retireScenario)
     assert(got2Gaps(kept) === Set(2L * H, 3L * H, 4L * H, 5L * H))
