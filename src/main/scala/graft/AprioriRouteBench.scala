@@ -46,12 +46,9 @@ object AprioriRouteBench {
       "96").toInt
     val catalog = sys.env.getOrElse("SPARK_GRAFT_APRIORI_CATALOG",
       "2000").toInt
-    val reps = math.max(1, scala.util.Try(
-      sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt).getOrElse(2))
+    val reps = Bench.reps(sys.env, default = 2)
     val gate = Bench.preGate("aprioriroutebench")
-    val spark = GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     // deterministic skewed draws; repartition because range(n) at
     // local scale under-splits and the explode would run near-serial
@@ -87,7 +84,7 @@ object AprioriRouteBench {
 
     def time(route: String): (Double, Long) = {
       var rows = -1L
-      val (sec, failed) = Bench.minTimeCounting(reps, () => {
+      val Bench.Timing(sec, _, failed, _) = Bench.minTimeCounting(reps, () => {
         rows = graft.relational.Apriori
           .triples(items, thr, forceRoute = Some(route)).count()
       }, e => e.printStackTrace())

@@ -1,5 +1,15 @@
 package graft
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
+import scala.jdk.CollectionConverters._
+
+/** The registry timer: the bench contract, and with
+  * `SPARK_GRAFT_ONLY` the dev timer and plan dump for a subset (see
+  * [[main]]). Its contention gate is shared by the other bench mains. */
 object Bench {
   /** 1-min system load (external contention sentinel): /proc/loadavg
     * where it exists, OperatingSystemMXBean elsewhere. */
@@ -22,27 +32,16 @@ object Bench {
     * just under any threshold while a contender is live (the round-13
     * false-clean: the driver record started at loadavg exactly 2.0
     * against a strict `> 2.0` check and ended at 6.23, stamped clean).
-    * Returns -1 where /proc/stat is unreadable — the caller falls back
-    * to the load-only gate and the record says so. */
-  private[graft] def busyFrac(intervalMs: Long = 1000): Double =
-    try {
-      def snap(): (Long, Long) = {
-        val v = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("/proc/stat")),
-          java.nio.charset.StandardCharsets.UTF_8)
-          .linesIterator.next().split("\\s+").drop(1).map(_.toLong)
-        // user..steal only (first 8): guest/guest_nice are already
-        // folded into user/nice by the kernel, so summing them
-        // double-counts guest time on VM hosts and over-reads busy
-        // (round-15 advice — conservative bias, but it discards
-        // records needlessly)
-        (v.take(8).sum, v(3) + v(4)) // total, idle+iowait
-      }
-      val (t0, i0) = snap()
-      Thread.sleep(intervalMs)
-      val (t1, i1) = snap()
-      if (t1 == t0) 0.0 else 1.0 - (i1 - i0).toDouble / (t1 - t0)
-    } catch { case _: Throwable => -1.0 }
+    * Returns -1 where /proc is unreadable — the caller falls back to
+    * the load-only gate and the record says so. */
+  private[graft] def busyFrac(intervalMs: Long = 1000): Double = {
+    val a = cpuSnap()
+    Thread.sleep(intervalMs)
+    val b = cpuSnap()
+    if (a.total < 0 || b.total < 0) -1.0
+    else if (b.total == a.total) 0.0
+    else 1.0 - (b.idle - a.idle).toDouble / (b.total - a.total)
+  }
 
   /** One aggregate-CPU + this-JVM tick snapshot, the raw material of
     * the IN-RUN contention sampler (round-15 verdict item 1: the
@@ -71,7 +70,11 @@ object Bench {
         java.nio.charset.StandardCharsets.UTF_8)
       // comm (field 2) may contain spaces — parse after the last ')'
       val rest = st.substring(st.lastIndexOf(')') + 2).split(" ")
-      // fields 14 (utime) + 15 (stime), 0-indexed from field 3
+      // fields 14 (utime) + 15 (stime), 0-indexed from field 3. Total
+      // is user..steal only (first 8): guest/guest_nice are already
+      // folded into user/nice by the kernel, so summing them
+      // double-counts guest time on VM hosts and over-reads busy
+      // (round-15 advice); idle is idle+iowait
       CpuSnap(v.take(8).sum, v(3) + v(4),
         rest(11).toLong + rest(12).toLong)
     } catch { case _: Throwable => CpuSnap(-1, -1, -1) }
@@ -112,15 +115,11 @@ object Bench {
     * record) with `contendedPre` stamped. Call BEFORE the session
     * spins any threads. */
   private[graft] def preGate(tag: String): Gate = {
-    val loadMax = scala.util.Try(
-      sys.env.getOrElse("SPARK_GRAFT_LOAD_MAX", "1.0").toDouble)
-      .getOrElse(1.0)
-    val busyMax = scala.util.Try(
-      sys.env.getOrElse("SPARK_GRAFT_BUSY_MAX", "0.15").toDouble)
-      .getOrElse(0.15)
-    val loadWaitSecs = scala.util.Try(
-      sys.env.getOrElse("SPARK_GRAFT_LOAD_WAIT_SECS", "180").toInt)
-      .getOrElse(180)
+    def knob(k: String, default: Double): Double =
+      sys.env.get(k).flatMap(_.trim.toDoubleOption).getOrElse(default)
+    val loadMax = knob("SPARK_GRAFT_LOAD_MAX", 1.0)
+    val busyMax = knob("SPARK_GRAFT_BUSY_MAX", 0.15)
+    val loadWaitSecs = knob("SPARK_GRAFT_LOAD_WAIT_SECS", 180).toInt
     def warm(load: Double, busy: Double): Boolean =
       load > loadMax || busy > busyMax
     var (load, busy) = (loadAvg(), busyFrac())
@@ -163,33 +162,197 @@ object Bench {
       s""""load_max":${g.loadMax},"busy_max":${g.busyMax},""" +
       s""""contended":$contended"""
 
-  /** Times `reps` executions of `run`, returning (min seconds, any
-    * rep failed). A failure on ANY rep taints the query — the
-    * throwing rep's ~ms latency would otherwise become the reported
-    * MIN and the record would stamp clean, the exact false-fast class
-    * the `errors` field exists to catch (round-14 review: the first
-    * cut only counted rep-1 failures). Successful-rep times are
-    * tracked SEPARATELY (round-15 advice): a query that succeeds on
-    * reps 1 and 3 but throws transiently on rep 2 reports the min of
-    * its REAL timings (still flagged failed=true, so persistence
-    * stays blocked); throw latency is the reported min only when
-    * every rep failed. Extracted so BenchGateSpec can pin the
-    * accounting without a registry run. */
+  /** Timed reps per measurement: `SPARK_GRAFT_REPS` when it parses,
+    * floored at 1, else `default`. Shared by every bench main. */
+  private[graft] def reps(env: Map[String, String], default: Int = 3): Int =
+    math.max(1, env.get("SPARK_GRAFT_REPS").flatMap(_.trim.toIntOption)
+      .getOrElse(default))
+
+  /** What [[minTimeCounting]] reports for one query: the min (see
+    * there), the first rep's seconds, whether any rep failed, and the
+    * 0-based index of the rep that gave the min. */
+  private[graft] final case class Timing(minSecs: Double, coldSecs: Double,
+      failed: Boolean, minRep: Int)
+
+  /** Times `reps` executions of `run`. A failure on ANY rep taints the
+    * query — the throwing rep's ~ms latency would otherwise become the
+    * reported MIN and the record would stamp clean, the exact
+    * false-fast class the `errors` field exists to catch (round-14
+    * review: the first cut only counted rep-1 failures). Successful-rep
+    * times are tracked SEPARATELY (round-15 advice): a query that
+    * succeeds on reps 1 and 3 but throws transiently on rep 2 reports
+    * the min of its REAL timings (still flagged failed=true, so
+    * persistence stays blocked); throw latency is the reported min only
+    * when every rep failed. `afterRep` runs after each rep, outside the
+    * timed section. Extracted so BenchGateSpec can pin the accounting
+    * without a registry run. */
   private[graft] def minTimeCounting(reps: Int, run: () => Unit,
-      onFirstFailure: Throwable => Unit = _ => ()): (Double, Boolean) = {
+      onFirstFailure: Throwable => Unit = _ => (),
+      afterRep: () => Unit = () => ()): Timing = {
     var failed = false
-    val ok = scala.collection.mutable.ListBuffer.empty[Double]
-    val bad = scala.collection.mutable.ListBuffer.empty[Double]
-    (1 to reps).foreach { _ =>
+    val secs = new Array[Double](reps)
+    val ok = new Array[Boolean](reps)
+    (0 until reps).foreach { i =>
       val t0 = System.nanoTime()
-      val succeeded = try { run(); true } catch {
+      ok(i) = try { run(); true } catch {
         case e: Throwable =>
           if (!failed) { failed = true; onFirstFailure(e) }
           false
       }
-      (if (succeeded) ok else bad) += (System.nanoTime() - t0) / 1e9
+      secs(i) = (System.nanoTime() - t0) / 1e9
+      afterRep()
     }
-    (if (ok.nonEmpty) ok.min else bad.min, failed)
+    // fastest successful rep; the fastest failed one only if none succeeded
+    val best = (0 until reps).minBy(i => (!ok(i), secs(i)))
+    Timing(secs(best), secs(0), failed, best)
+  }
+
+  /** One completed stage of a timed rep, as the listener saw it. */
+  private[graft] final case class StageRec(id: Int, name: String,
+      submitMs: Long, doneMs: Long, tasks: Int, shuffleRead: Long,
+      shuffleWrite: Long, spill: Long)
+
+  /** One rep's jobs, stages and, when plans are kept, last `count` (the
+    * timed action). */
+  private final case class RepTrace(jobs: Int, stages: Seq[StageRec],
+      count: Option[QueryExecution])
+
+  /** The always-on listener of [[timeQueries]]. Spark may deliver an
+    * action's events after the action returns; [[take]] drains the bus
+    * first, so each rep's trace is complete and none leaks into the
+    * next. */
+  private final class Recorder(spark: SparkSession)
+      extends SparkListener with QueryExecutionListener {
+    private val jobs = new java.util.concurrent.atomic.AtomicInteger
+    private val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageRec]
+    @volatile private var count: Option[QueryExecution] = None
+
+    override def onJobStart(j: SparkListenerJobStart): Unit =
+      jobs.incrementAndGet()
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+      val si = e.stageInfo
+      val m = si.taskMetrics
+      val submit = si.submissionTime.getOrElse(0L)
+      stages.add(StageRec(si.stageId, si.name.takeWhile(_ != '\n').take(90),
+        submit, si.completionTime.getOrElse(submit), si.numTasks,
+        if (m == null) 0L else m.shuffleReadMetrics.totalBytesRead,
+        if (m == null) 0L else m.shuffleWriteMetrics.bytesWritten,
+        if (m == null) 0L else m.memoryBytesSpilled + m.diskBytesSpilled))
+    }
+
+    // Dataset.count()'s own execution: its executedPlan is the final one
+    override def onSuccess(funcName: String, qe: QueryExecution,
+        durationNs: Long): Unit =
+      if (funcName == "count") count = Some(qe)
+
+    override def onFailure(funcName: String, qe: QueryExecution,
+        exception: Exception): Unit = ()
+
+    def take(): RepTrace = {
+      if (!org.apache.spark.sql.GraftSqlBridge.drainListeners(spark))
+        System.err.println("[bench] WARNING: listener bus did not drain " +
+          "in 60 s; this rep's layer record may be short")
+      val seen = stages.asScala.toSeq
+      stages.clear()
+      val t = RepTrace(jobs.getAndSet(0), seen, count)
+      count = None
+      t
+    }
+  }
+
+  /** Total length of the union of `[start, end]` millisecond intervals. */
+  private def coveredMs(iv: Seq[(Long, Long)]): Long =
+    iv.sortBy(_._1).foldLeft((0L, Long.MinValue)) {
+      case ((sum, reach), (s, e)) =>
+        if (e <= reach) (sum, reach)
+        else (sum + e - math.max(s, reach), e)
+    }._1
+
+  /** One query's record: its [[Timing]], external busy share across its
+    * reps ([[othersBusyFrac]]), and its min rep's jobs, stages and plan. */
+  private[graft] final case class QueryRun(name: String, timing: Timing,
+      busyInrun: Double, jobs: Int, stages: Seq[StageRec],
+      plan: Option[String]) {
+    def tasks: Long = stages.map(_.tasks.toLong).sum
+    /** Wall time with at least one stage running. */
+    def stageSecs: Double =
+      coveredMs(stages.map(s => (s.submitMs, s.doneMs))) / 1000.0
+    /** Share of the min rep's wall time with no stage running: planning,
+      * codegen, driver-side probes and collects. */
+    def driverShare: Double =
+      if (timing.minSecs <= 0) 0.0
+      else math.min(1.0, math.max(0.0, 1.0 - stageSecs / timing.minSecs))
+
+    def layersJson: String =
+      s"""{"cold_s":${timing.coldSecs},"jobs":$jobs,""" +
+        s""""stages":${stages.size},"tasks":$tasks,""" +
+        s""""shuffle_read_bytes":${stages.map(_.shuffleRead).sum},""" +
+        s""""shuffle_write_bytes":${stages.map(_.shuffleWrite).sum},""" +
+        s""""spill_bytes":${stages.map(_.spill).sum},""" +
+        s""""stage_time_s":${math.round(stageSecs * 1000) / 1000.0},""" +
+        s""""driver_share":${math.round(driverShare * 10000) / 10000.0}}"""
+
+    /** The min rep's 25 slowest stages, one line each. */
+    def stageTable: Seq[String] =
+      (s"[bench] $name stages of the min rep (id, ms, shufRead, " +
+        "shufWrite, tasks, name):") +:
+        stages.sortBy(s => s.submitMs - s.doneMs).take(25).map { s =>
+          f"[bench]   ${s.id}%5d ${s.doneMs - s.submitMs}%6d ms  " +
+            f"r=${s.shuffleRead / 1024}%8d KB w=${s.shuffleWrite / 1024}%8d KB" +
+            f" tasks=${s.tasks}%3d  ${s.name}"
+        }
+  }
+
+  /** The per-query loop of [[main]]: each registry query in `names` is
+    * timed at `dir` by [[minTimeCounting]] over `reps` `count()`s, with
+    * its in-run contention sample and the listener trace of its min rep
+    * (plus, with `explain`, that rep's executed plan). */
+  private[graft] def timeQueries(spark: SparkSession, dir: String,
+      names: Seq[String], reps: Int, explain: Boolean = false)
+      : Seq[QueryRun] = {
+    val registry = SparkEntry.queries
+    val rec = new Recorder(spark)
+    spark.sparkContext.addSparkListener(rec)
+    if (explain) spark.listenerManager.register(rec)
+    try {
+      rec.take() // start clean: nothing that ran before is charged
+      names.map { name =>
+        val fn = registry(name)
+        val traces = scala.collection.mutable.ArrayBuffer.empty[RepTrace]
+        // in-run contention sample: external-process busy fraction
+        // across this query's reps (see cpuSnap/othersBusyFrac) — the
+        // pre-gate and post-sample bracket the run, this brackets each
+        // QUERY, so a mid-run burst localizes itself to the segment it
+        // inflated instead of hiding between the two run-level samples
+        val snap0 = cpuSnap()
+        val timing = minTimeCounting(reps,
+          () => { fn(spark, dir).count(); () },
+          e => System.err.println(s"[bench] WARNING: $name failed: " +
+            e.toString.linesIterator.next()),
+          () => traces += rec.take())
+        val busy = othersBusyFrac(snap0, cpuSnap())
+        val best = traces(timing.minRep)
+        val run = QueryRun(name, timing, busy, best.jobs, best.stages,
+          best.count.map(_.executedPlan.toString))
+        // queries that persist intermediates (q28/q29/q52/q53/q55) must
+        // not leak cache into LATER queries: CacheManager holds strong
+        // refs until an explicit unpersist. Cleared per query (not per
+        // rep — reps share the cache by canonical-plan match, so the
+        // min reports the warm path), outside the timed section.
+        Caches.release(blocking = true)
+        spark.catalog.clearCache()
+        // decouple queries: collect the predecessor's garbage (freed
+        // cache blocks, shuffle buffers) OUTSIDE the next timed section,
+        // so one query's allocation debt cannot inflate the next
+        // query's measured time via a mid-run GC pause
+        System.gc()
+        run
+      }
+    } finally {
+      spark.listenerManager.unregister(rec)
+      spark.sparkContext.removeSparkListener(rec)
+    }
   }
 
   def main(args: Array[String]): Unit = {
@@ -198,33 +361,28 @@ object Bench {
     // BEFORE Spark spins any threads; busy_frac + loadavg dual signal,
     // bounded wait, post-run re-sample — see preGate/postSample.
     val gate = preGate("bench")
-    // default to the machine: the bench contract is local[32] on a
-    // 32-CPU box; a fixed small default silently benches at 1/8th the
-    // parallelism when the env var is absent
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // default: one shuffle partition per core (the bench contract);
-      // SPARK_GRAFT_SHUFFLE_PARTITIONS probes scale points where 3×+
-      // data per fixed partition spills (the sf3 q75 question)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm-up at the smallest sf: JIT + codegen + parquet-reader paths,
-    // so per-query timings measure the engine, not JVM cold start.
+    // cores default to the machine (GraftSession.cpus), one shuffle
+    // partition per core; SPARK_GRAFT_SHUFFLE_PARTITIONS probes scale
+    // points where 3×+ data per fixed partition spills (sf3 q75)
+    val spark = GraftSession.local()
+    sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+      .foreach(spark.conf.set("spark.sql.shuffle.partitions", _))
     // optional comma-separated subset for local iteration on hot
     // queries (e.g. SPARK_GRAFT_ONLY=q28_jaccard_pairs,q29_minhash_lsh);
     // absent → the full registry, which is what the driver runs
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
+    // fixed name order: Map hash order reshuffles whenever a query is
+    // added, which silently changes each query's timing CONTEXT
+    // (predecessor's cache teardown, JIT state) between rounds.
+    val registry = SparkEntry.queries
+    val names = registry.keys.toSeq.sorted.filter(n => only.forall(_.contains(n)))
+    // Warm-up at the smallest sf: JIT + codegen + parquet-reader paths,
+    // so per-query timings measure the engine, not JVM cold start.
     val warmDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmDir).isDirectory && warmDir != sfDir)
-      SparkEntry.queries.foreach { case (name, fn) =>
-        if (only.forall(_.contains(name)))
-          try { fn(spark, warmDir).count() } catch { case _: Throwable => () }
+      names.foreach { n =>
+        try { registry(n)(spark, warmDir).count() } catch { case _: Throwable => () }
       }
     // drop warm-up caches before any timing starts
     Caches.release(blocking = true)
@@ -239,61 +397,29 @@ object Bench {
     // regardless of what exited just before. (Round 2 mistook single-
     // run variance for regressions; commit 991658b adopted min-of-N
     // for ZOrderSpec's scan metrics; this is the same discipline.)
-    val reps = math.max(1,
-      scala.util.Try(sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt)
-        .getOrElse(3))
-    // fixed name order: Map hash order reshuffles whenever a query is
-    // added, which silently changes each query's timing CONTEXT
-    // (predecessor's cache teardown, JIT state) between rounds.
+    val nReps = reps(sys.env)
     // Per-query exceptions are swallowed (one broken query must not
     // lose the whole round record) but COUNTED and stamped into the
     // JSON — a record of failures timing ~10 ms each reads like a
     // fast clean run otherwise (measured, round 14: a wrong SF dir
     // produced an all-green-looking 2.9 s "registry" where every
-    // query had thrown on its table read)
-    val errNames = scala.collection.mutable.ListBuffer.empty[String]
-    // in-run contention samples: external-process busy fraction across
-    // each query's reps (see cpuSnap/othersBusyFrac) — the pre-gate
-    // and post-sample bracket the run, this brackets each QUERY, so a
-    // mid-run burst localizes itself to the segment it inflated
-    // instead of hiding between the two run-level samples
-    val inrun = scala.collection.mutable.ListBuffer.empty[(String, Double)]
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
-      val snap0 = cpuSnap()
-      val (minSecs, failed) = minTimeCounting(reps,
-        () => { fn(spark, sfDir).count(); () },
-        e => System.err.println(s"[bench] WARNING: $name failed: " +
-          e.toString.linesIterator.next()))
-      inrun += name -> othersBusyFrac(snap0, cpuSnap())
-      if (failed) errNames += name
-      // queries that persist intermediates (q28/q29/q52/q53/q55) must
-      // not leak cache into LATER queries: CacheManager holds strong
-      // refs until an explicit unpersist. Cleared per query (not per
-      // rep — reps share the cache by canonical-plan match, so the
-      // median reports the warm path), outside the timed section.
-      Caches.release(blocking = true)
-      spark.catalog.clearCache()
-      // decouple queries: collect the predecessor's garbage (freed
-      // cache blocks, shuffle buffers) OUTSIDE the next timed section,
-      // so one query's allocation debt cannot inflate the next
-      // query's measured time via a mid-run GC pause
-      System.gc()
-      // min-of-reps (see the reps rationale above)
-      name -> minSecs
-    }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
+    // query had thrown on its table read). A subset run is the dev
+    // timer: it also prints each query's stage table and executed plan.
+    val runs = timeQueries(spark, sfDir, names, nReps,
+      explain = only.nonEmpty)
+    val errNames = runs.filter(_.timing.failed).map(_.name)
+    val qs = runs.map(r => "\"" + r.name + "\":" + r.timing.minSecs)
       .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
+    val total = runs.map(_.timing.minSecs).sum
     val (loadAfter, busyAfter, postContended) = postSample(gate)
     // the in-run samples incriminate a burst the bracketing samples
     // cannot see; threshold = the same busyMax the gate uses (the
     // sampler measures EXTERNAL share only, so engine saturation
     // never trips it)
-    val readable = inrun.filter(_._2 >= 0)
+    val readable = runs.filter(_.busyInrun >= 0)
     val (inrunMaxQ, inrunMax) =
-      if (readable.isEmpty) ("", -1.0) else readable.maxBy(_._2)
+      if (readable.isEmpty) ("", -1.0)
+      else { val r = readable.maxBy(_.busyInrun); (r.name, r.busyInrun) }
     val contended = postContended || inrunMax > gate.busyMax
     if (inrunMax > gate.busyMax) System.err.println(
       f"[bench] WARNING: in-run external busy peaked at $inrunMax%.3f" +
@@ -312,8 +438,9 @@ object Bench {
     // compact; -1 = /proc unreadable for that window) + the max and
     // its query — the adjudication stamp: a clean record shows the
     // map flat near 0, an inflated segment self-incriminates
-    val inrunJs = inrun.map { case (k, v) =>
-      "\"" + k + "\":" + (if (v < 0) "-1" else math.round(v * 10000) / 10000.0)
+    val inrunJs = runs.map { r =>
+      "\"" + r.name + "\":" +
+        (if (r.busyInrun < 0) "-1" else math.round(r.busyInrun * 10000) / 10000.0)
     }.mkString("{", ",", "}")
     val json =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir",""" +
@@ -321,7 +448,15 @@ object Bench {
         s""""busy_inrun_max":${
           if (inrunMax < 0) "-1" else math.round(inrunMax * 10000) / 10000.0
         },"busy_inrun_max_q":"$inrunMaxQ","inrun":$inrunJs,""" +
-        s""""errors":${errNames.length},"reps":$reps,"stat":"min"}"""
+        s""""errors":${errNames.length},"reps":$nReps,"stat":"min"}"""
+    if (only.nonEmpty) runs.foreach { r =>
+      r.stageTable.foreach(println)
+      r.plan.foreach(println)
+    }
+    // per-query layers, on a line that does NOT start with {"metric"
+    // (the tools take the last such line as the record)
+    println(runs.map(r => "\"" + r.name + "\":" + r.layersJson)
+      .mkString("""{"layers":{""", ",", s"""},"sf":"$sfDir","reps":$nReps}"""))
     // the driver scrapes stdout's tail; with 107 queries the single JSON
     // line can outgrow that capture window (round 5 lost the comparison
     // to exactly this). Persist the line to a known path as well, so the

@@ -10,8 +10,10 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType}
 /** Session extensions: registers the engine's custom SQL surface.
   *
   * Usage: `spark.sql.extensions=graft.GraftExtensions` at session build
-  * (GraftSession does this), or `GraftExtensions.register(spark)` on an
-  * externally created session (Verify/Bench).
+  * (`GraftSession.builder` does this for every session the library
+  * builds), or `GraftExtensions.register(spark)` on a session built
+  * elsewhere (`GraftSession.tune` does this for a session passed to
+  * `SparkEntry`).
   *
   * SQL forms:
   *   spike_score(history, value)                        — reference params (95/85)
@@ -226,11 +228,4 @@ object GraftExtensions {
         spark.sessionState.functionRegistry.registerFunction(id, info, builder)
     }
   }
-
-  /** Kept as the aggregators-only entry point (GraftSession.tune calls
-    * it per query invocation — cheap: four hashmap puts). */
-  def registerAggregators(spark: org.apache.spark.sql.SparkSession): Unit =
-    aggregatorFns.foreach { case (id, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-    }
 }

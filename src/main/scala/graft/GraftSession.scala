@@ -81,23 +81,33 @@ object GraftSession {
       // Tables.events (truncate to µs, matching the DuckDB oracle).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
 
-  def local(cores: Int = 32): SparkSession = {
+  /** The local core count of a session built without an explicit one:
+    * the environment variable read below when it is a positive integer,
+    * else every processor the JVM sees. The one place a main reads it. */
+  private[graft] def cpus(env: Map[String, String]): Int =
+    env.get("SPARK_GRAFT_CPUS").flatMap(_.trim.toIntOption).filter(_ > 0)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** The session every main builds: [[builder]], WARN logs, [[tune]]. */
+  def local(cores: Int = cpus(sys.env)): SparkSession = {
     val s = builder(cores).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     tune(s)
     s
   }
 
-  /** Apply runtime confs to an externally-created session (Verify/Bench
-    * build their own); idempotent. */
+  /** Apply the runtime confs and SQL functions to a session this library
+    * did not build — callers of `SparkEntry.entry` and
+    * `SparkEntry.queries` pass their own session, so both call this per
+    * invocation. Idempotent; a no-op in effect on a [[local]] session. */
   def tune(s: SparkSession): SparkSession = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     s.conf.set("spark.sql.session.timeZone", "UTC")
     s.conf.set("spark.sql.adaptive.enabled", "true")
     s.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize",
       CoalesceMinPartitionSize)
-    // custom SQL functions for sessions built without the extensions
-    // config (Verify/Bench construct their own session)
+    // custom SQL functions for a session built without the extensions
+    // config
     GraftExtensions.register(s)
     s
   }

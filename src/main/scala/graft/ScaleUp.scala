@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale rehearsal generator: derives an sf1-shaped dataset (10× sf0.1)
@@ -42,12 +42,7 @@ object ScaleUp {
     val out = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "/root/repo/data/sf1")
     // replication factor: 10 → sf1, 100 → sf10 (the two-decade probe)
     val Factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${Runtime.getRuntime.availableProcessors()}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     import spark.implicits._
 
     def t(name: String): DataFrame = spark.read.parquet(s"$in/$name.parquet")

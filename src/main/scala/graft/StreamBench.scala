@@ -66,10 +66,8 @@ object StreamBench {
     // the shared refuse-when-warm gate (round 14: busy_frac + loadavg,
     // bounded wait, post-run re-sample — Bench.preGate's scaladoc)
     val gate = Bench.preGate("streambench")
-    val reps = math.max(1, scala.util.Try(
-      sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt).getOrElse(3))
-    val spark = GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val reps = Bench.reps(sys.env)
+    val spark = GraftSession.local()
     import spark.implicits._
 
     // synthetic RAW envelope lines — see syntheticEnvelope's scaladoc

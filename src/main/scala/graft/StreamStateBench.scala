@@ -51,18 +51,26 @@ object StreamStateBench {
     rec(new java.io.File(d))
   }
 
+  /** State rows and memory bytes of a query: the MAX across its
+    * progress events — the final micro-batch can be a no-data tick whose
+    * report misses the loaded maps, so the peak is the honest footprint. */
+  private def stateMax(q: org.apache.spark.sql.streaming.StreamingQuery)
+      : (Long, Long) = {
+    val st = q.recentProgress.toSeq.flatMap(_.stateOperators.toSeq)
+    (st.map(_.numRowsTotal).maxOption.getOrElse(0L),
+      st.map(_.memoryUsedBytes).maxOption.getOrElse(0L))
+  }
+
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_GRAFT_STREAM_ROWS", "200000").toInt
     val nBatches = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCHES", "10").toInt)
-    val reps = math.max(1, scala.util.Try(
-      sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt).getOrElse(3))
+    val reps = Bench.reps(sys.env)
     val provider = sys.env.getOrElse("SPARK_GRAFT_STATE_PROVIDER", "memory")
     // the shared refuse-when-warm gate (round 14: busy_frac + loadavg,
     // bounded wait, post-run re-sample — Bench.preGate's scaladoc)
     val gate = Bench.preGate("streamstatebench")
-    val spark = GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val spark = GraftSession.local()
     if (provider == "rocksdb")
       spark.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state." +
@@ -154,16 +162,10 @@ object StreamStateBench {
       batches.foreach { b => in.addData(b); q.processAllAvailable() }
       val sec = (System.nanoTime() - t0) / 1e9
       val nCands = spark.table(s"ssb_out_$rep").count()
-      // state accounting: the MAX across progress events — the final
-      // micro-batch can be a no-data tick whose report misses the
-      // loaded maps, so the peak is the honest footprint
-      val st = q.recentProgress.toSeq.flatMap(_.stateOperators.toSeq)
       if (sys.env.contains("SPARK_GRAFT_DEBUG_STATE"))
-        st.foreach(s => System.err.println("STATEOP " + s.json))
-      val stateRows =
-        if (st.isEmpty) 0L else st.map(_.numRowsTotal).max
-      val stateBytes =
-        if (st.isEmpty) 0L else st.map(_.memoryUsedBytes).max
+        q.recentProgress.flatMap(_.stateOperators)
+          .foreach(s => System.err.println("STATEOP " + s.json))
+      val (stateRows, stateBytes) = stateMax(q)
       q.stop()
       cleanup(ckpt)
       (sec, nCands, stateRows, stateBytes)
@@ -578,9 +580,7 @@ object StreamStateBench {
       val t0 = System.nanoTime()
       ids.foreach { b => in.addData(b); q.processAllAvailable() }
       val sec = (System.nanoTime() - t0) / 1e9
-      val st = q.recentProgress.toSeq.flatMap(_.stateOperators.toSeq)
-      val stateRows = if (st.isEmpty) 0L else st.map(_.numRowsTotal).max
-      val stateBytes = if (st.isEmpty) 0L else st.map(_.memoryUsedBytes).max
+      val (stateRows, stateBytes) = stateMax(q)
       q.stop()
       cleanup(ckpt)
       (sec, (rows.get(), anomalies.get()), stateRows, stateBytes)
@@ -658,11 +658,10 @@ object StreamStateBench {
       batches.foreach { b => in.addData(b); q.processAllAvailable() }
       val sec = (System.nanoTime() - t0) / 1e9
       val matches = spark.table(s"ssb_asof_$rep").count()
-      val st = q.recentProgress.toSeq.flatMap(_.stateOperators.toSeq)
-      val stateRows = if (st.isEmpty) 0L else st.map(_.numRowsTotal).max
+      val (stateRows, stateBytes) = stateMax(q)
       q.stop()
       cleanup(ckpt)
-      (sec, matches, stateRows)
+      (sec, matches, stateRows, stateBytes)
     }
     require(runs.map(_._2).distinct.length == 1,
       s"non-deterministic match output across reps: ${runs.map(_._2)}")
@@ -673,6 +672,7 @@ object StreamStateBench {
         s""""value":${(n / sec).toLong},"unit":"rows/sec","rows":$n,""" +
         s""""batches":$nBatches,"users":$users,""" +
         s""""matches":${runs.head._2},"state_rows":${runs.last._3},""" +
+        s""""state_bytes":${runs.last._4},""" +
         s""""seconds":${math.round(sec * 1000) / 1000.0},""" +
         s""""provider":"$provider","reps":$reps,""" +
         Bench.gateJson(gate, loadAfter, busyAfter, contended) + "}"

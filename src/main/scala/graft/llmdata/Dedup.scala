@@ -120,6 +120,41 @@ object Dedup {
     * spec forces the fallback with budget 0 and pins output equality. */
   private[llmdata] val VocabBitmapBudget: Long = 1L << 16
 
+  /** The dictionary-bitmap vocabulary of `tokens` (a `w` column), shared
+    * by [[setSim]] and [[IncrementalLsh]]'s verify. A bounded probe (the
+    * q55 limit-collect pattern) brings at most `min(budget,
+    * VocabBitmapBudget) + 1` distinct words to the driver: the measured
+    * scalar that picks the verify regime, and when the vocabulary fits,
+    * the dictionary itself — sorted ids in a LocalRelation, so the
+    * downstream plans are canonically stable across invocations
+    * (exchange reuse, codegen caching and same-plan cache sharing; the
+    * zipWithIndex RDD it replaced cost two more jobs and broke all
+    * three). Only injectivity of word → bit matters. Returns `tokens`
+    * joined to its word ids with `bucket` (wid / 64) and `bit`
+    * (1 << wid % 64), and the bucket count; None past the budget. */
+  private[llmdata] def vocabBits(tokens: DataFrame,
+      budget: Long = VocabBitmapBudget): Option[(DataFrame, Int)] = {
+    val probeLim = (math.min(budget, VocabBitmapBudget) + 1).toInt
+    val words = tokens.select("w").distinct()
+      .limit(probeLim).collect().map(_.getString(0))
+    if (words.length >= probeLim) None
+    else {
+      import tokens.sparkSession.implicits._
+      val vocab = words.sorted.zipWithIndex.toSeq.toDF("w", "wid")
+      Some((tokens.join(broadcast(vocab), "w")
+        .withColumn("bucket", (col("wid") / 64).cast("int"))
+        .withColumn("bit",
+          expr("shiftleft(CAST(1 AS BIGINT), CAST(wid % 64 AS INT))")),
+        math.max(1, (words.length + 63) / 64)))
+    }
+  }
+
+  /** One `bit_or` per bucket over [[vocabBits]]' rows: bucket b's mask
+    * word of the group's words. */
+  private[llmdata] def bucketMasks(nBuckets: Int): Seq[Column] =
+    (0 until nBuckets).map(b => expr(
+      s"bit_or(CASE WHEN bucket = $b THEN bit ELSE CAST(0 AS BIGINT) END)"))
+
   private def setSim(s: SparkSession, d: String,
       fpKey: Seq[String], withPrefix: Boolean, nMinhash: Int,
       vocabBudget: Long = VocabBitmapBudget): SetSim = {
@@ -144,34 +179,11 @@ object Dedup {
       .withColumn("fp", md5(concat_ws(" ", array_sort(col("dw")))))
       .select(col("doc_id"), col("lang"), col("fp"),
         explode(col("dw")).as("w")))
-    // Bounded vocabulary probe (round 16, the q55 limit-collect
-    // pattern): at most budget+1 rows ever reach the driver — the one
-    // measured scalar that picks the verify regime (the AQE-style
-    // measure-then-plan pattern; round-5 VERDICT: a manual-only
-    // fallback is a driver OOM waiting for the first open-vocabulary
-    // corpus) — and when the vocabulary fits, the probe IS the
-    // dictionary. vs the old zipWithIndex RDD: one job instead of
-    // three (count + zipWithIndex's own count job + the build), a
-    // globally deterministic sorted id assignment instead of
-    // partition-order, and a LocalRelation vocab whose downstream
-    // plans are canonically STABLE across invocations — an RDD-backed
-    // vocab made every per-rep plan unique, which defeated exchange
-    // reuse, codegen caching, and same-plan cache sharing (measured on
-    // q109, the same dictionary shape). Bit positions stay internal:
-    // no output depends on which bit a word gets, only injectivity.
-    val probeLim = (math.min(vocabBudget, VocabBitmapBudget) + 1).toInt
-    val wordsProbe = ts.select("w").distinct()
-      .limit(probeLim).collect().map(_.getString(0))
-    val bitmap = wordsProbe.length < probeLim
-    val nBuckets =
-      if (bitmap) math.max(1, (wordsProbe.length + 63) / 64) else 1
-    val base = if (bitmap) {
-      import s.implicits._
-      val vocab = wordsProbe.sorted.zipWithIndex.toSeq.toDF("w", "wid")
-      ts.join(broadcast(vocab), "w")
-        .withColumn("bucket", (col("wid") / 64).cast("int"))
-        .withColumn("bit", expr("shiftleft(CAST(1 AS BIGINT), CAST(wid % 64 AS INT))"))
-    } else ts
+    // the bounded vocabulary probe picks the verify regime
+    val vocab = vocabBits(ts, vocabBudget)
+    val bitmap = vocab.isDefined
+    val nBuckets = vocab.fold(1)(_._2)
+    val base = vocab.fold(ts)(_._1)
     // df (the PPJoin rarest-first prefix order) comes from a
     // pre-aggregated (lang, w) count joined back onto the token rows
     // (round 15, guide §2.3 aggregate-before-shuffle): the window
@@ -188,9 +200,7 @@ object Dedup {
         Seq("lang", "w"))
     else base
     val maskAggs = if (bitmap)
-      (0 until nBuckets).map(b =>
-        expr(s"bit_or(CASE WHEN bucket = $b THEN bit ELSE CAST(0 AS BIGINT) END)")
-          .as(s"m$b"))
+      bucketMasks(nBuckets).zipWithIndex.map { case (m, b) => m.as(s"m$b") }
     else Nil
     // bitmap + prefix: each token's (bucket, bit) rides the toks
     // struct AFTER (df, w) — sort order is decided by (df, w) alone

@@ -213,23 +213,13 @@ object IncrementalLsh {
     // dictionary is per-ingest SCRATCH (never persisted), so the index
     // stays self-contained and the protocol keeps its no-global-state
     // property; past the budget the q58 count-join shape runs instead —
-    // same exact values.
-    // bounded vocab probe (the q55 limit-collect pattern, round 16):
-    // ≤ budget+1 rows ever reach the driver, and when the vocabulary
-    // fits the budget the probe IS the dictionary — the separate
-    // count() job and the zipWithIndex RDD job both fold away
-    val distinctW = toks.select("w").distinct()
-    val wordsProbe = distinctW
-      .limit(Dedup.VocabBitmapBudget.toInt + 1).collect()
-      .map(_.getString(0))
-    val ni3 =
-      if (wordsProbe.length <= Dedup.VocabBitmapBudget) {
-        val nWords = wordsProbe.length.toLong
-        val nBuckets = math.max(1, ((nWords + 63) / 64).toInt)
+    // same exact values. The probe is Dedup.vocabBits'.
+    val ni3 = Dedup.vocabBits(toks) match {
+      case Some((bits, nBuckets)) =>
         // measured broadcast guard for the verify joins (round 16,
-        // guide §3.1): without it the planner cannot size the masks
-        // aggregate (its lineage holds an RDD-backed vocab, estimated
-        // at defaultSizeInBytes), so AQE broadcast the CANDIDATE side
+        // guide §3.1): without it the planner could not size the masks
+        // aggregate (then built over an RDD-backed vocab), so AQE
+        // broadcast the CANDIDATE side
         // — 866 K (a_id, b_id) pairs at sf0.1 — and then shuffled +
         // sorted the pair-sized join-1 output by b_id (13 MB exchange,
         // the warm path's dominant stage). Masks is the per-DOC side
@@ -242,32 +232,14 @@ object IncrementalLsh {
         // the shuffle join keeps its safe shape.
         val nCandDocs = candDocs.count()
         val maskBytes = nCandDocs * (16L + 8L * nBuckets)
-        // Ids need only be unique and dense — the popcount intersection
-        // is invariant to WHICH bit a word gets. The dictionary is
-        // DRIVER-BUILT from the bounded probe (round 16): vs the old
-        // zipWithIndex RDD — one job instead of two, a globally
-        // deterministic (sorted) id assignment instead of
-        // partition-order, and a LocalRelation the planner can SIZE.
-        // An RDD-backed vocab made every downstream plan canonically
-        // unique per invocation, which defeated exchange reuse (the
-        // masks broadcast built twice), codegen caching, and
-        // same-plan cache sharing across bench reps.
-        import docs.sparkSession.implicits._
-        val vocab = wordsProbe.sorted.zipWithIndex.toSeq.toDF("w", "wid")
         // persisted: the two verify sides each materialize their own
         // build of this subtree (measured — the canonically-equal
         // broadcast stages did NOT reuse across the self-join's
         // deduplicated aliases), so without the cache the aggregate
         // runs twice per ingest; with it the second build is a cache
         // scan
-        val masks = graft.Caches.persist(toks.join(broadcast(vocab), "w")
-          .withColumn("bucket", (col("wid") / 64).cast("int"))
-          .withColumn("bit",
-            expr("shiftleft(CAST(1 AS BIGINT), CAST(wid % 64 AS INT))"))
-          .groupBy("doc_id")
-          .agg(array((0 until nBuckets).map(b =>
-            expr(s"bit_or(CASE WHEN bucket = $b THEN bit ELSE CAST(0 AS BIGINT) END)")): _*)
-            .as("mask")))
+        val masks = graft.Caches.persist(bits.groupBy("doc_id")
+          .agg(array(Dedup.bucketMasks(nBuckets): _*).as("mask")))
         val mB = if (maskBytes <= MaskBroadcastBytes) broadcast(masks)
           else masks
         cand
@@ -276,11 +248,12 @@ object IncrementalLsh {
           .withColumn("ni",
             Dedup.maskIntersect(col("ma.mask"), col("mb.mask")))
           .select("a_id", "b_id", "ni")
-      } else
+      case None =>
         cand
           .join(toks.toDF("a_id", "w"), "a_id")
           .join(toks.toDF("b_id", "w"), Seq("b_id", "w"))
           .groupBy("a_id", "b_id").agg(count(lit(1)).as("ni"))
+    }
     ni3
       .join(nw.toDF("a_id", "nw_a"), "a_id")
       .join(nw.toDF("b_id", "nw_b"), "b_id")

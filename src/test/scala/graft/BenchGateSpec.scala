@@ -49,7 +49,7 @@ class BenchGateSpec extends AnyFunSuite {
     // (the real timings), with the taint flag still set.
     var rep = 0
     var reported = 0
-    val (minSecs, failed) = Bench.minTimeCounting(3, () => {
+    val Bench.Timing(minSecs, _, failed, _) = Bench.minTimeCounting(3, () => {
       rep += 1
       if (rep == 2) throw new RuntimeException("transient")
       Thread.sleep(25)
@@ -59,12 +59,12 @@ class BenchGateSpec extends AnyFunSuite {
     assert(minSecs >= 0.025,
       "a transient rep's ~ms throw latency must not become the min " +
         "when successful reps exist")
-    val (okSecs, okFailed) =
+    val Bench.Timing(okSecs, _, okFailed, _) =
       Bench.minTimeCounting(2, () => Thread.sleep(10))
     assert(!okFailed && okSecs >= 0.01)
     // every rep failed: throw latency is all there is — report it,
     // tainted (the errors count blocks persistence either way)
-    val (allBadSecs, allBadFailed) = Bench.minTimeCounting(2,
+    val Bench.Timing(allBadSecs, _, allBadFailed, _) = Bench.minTimeCounting(2,
       () => throw new RuntimeException("down"))
     assert(allBadFailed && allBadSecs >= 0.0)
   }
@@ -96,6 +96,34 @@ class BenchGateSpec extends AnyFunSuite {
     assert(othersBusyFrac(CpuSnap(-1, -1, -1), CpuSnap(100, 0, 0)) == -1.0)
     assert(othersBusyFrac(CpuSnap(100, 0, 0), CpuSnap(-1, -1, -1)) == -1.0)
     assert(othersBusyFrac(CpuSnap(100, 50, 10), CpuSnap(100, 50, 10)) == -1.0)
+  }
+
+  test("the rep-1 time is the cold time and the min names its rep") {
+    var rep = 0
+    val t = Bench.minTimeCounting(3, () => {
+      rep += 1
+      Thread.sleep(if (rep == 1) 150 else if (rep == 2) 5 else 80)
+    })
+    assert(t.minRep == 1 && !t.failed)
+    assert(t.coldSecs >= 0.15 && t.coldSecs >= t.minSecs)
+    assert(t.minSecs >= 0.005 && t.minSecs < 0.08)
+  }
+
+  test("the core count is SPARK_GRAFT_CPUS when it is a positive integer, else every processor") {
+    val all = Runtime.getRuntime.availableProcessors()
+    assert(GraftSession.cpus(Map("SPARK_GRAFT_CPUS" -> "6")) == 6)
+    assert(GraftSession.cpus(Map("SPARK_GRAFT_CPUS" -> " 2 ")) == 2)
+    assert(GraftSession.cpus(Map.empty) == all)
+    for (bad <- Seq("", "0", "-4", "four", "2.5"))
+      assert(GraftSession.cpus(Map("SPARK_GRAFT_CPUS" -> bad)) == all, bad)
+  }
+
+  test("reps is SPARK_GRAFT_REPS floored at 1, else the caller's default") {
+    assert(Bench.reps(Map("SPARK_GRAFT_REPS" -> "5")) == 5)
+    assert(Bench.reps(Map("SPARK_GRAFT_REPS" -> "0")) == 1)
+    assert(Bench.reps(Map.empty) == 3)
+    assert(Bench.reps(Map.empty, default = 2) == 2)
+    assert(Bench.reps(Map("SPARK_GRAFT_REPS" -> "x"), default = 2) == 2)
   }
 
   test("gateJson carries both samples, both thresholds, and the flag") {
