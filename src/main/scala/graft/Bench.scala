@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import scala.jdk.CollectionConverters._
 
@@ -269,6 +271,56 @@ object Bench {
         else (sum + e - math.max(s, reach), e)
     }._1
 
+  /** `plan`'s `toString` with each distinct cached plan printed once.
+    * Spark prints an `InMemoryRelation`'s whole cached plan again at
+    * every scan of it, so a cache-heavy query's dump was mostly
+    * repetition (q213: 18,951 lines). The first copy of each cached
+    * plan is tagged `[cached plan #k]` on its `InMemoryRelation` line;
+    * at a later scan of the same plan only that line is kept, tagged
+    * `[cached plan #k, printed above]`. A copy is found by its node
+    * texts, not its indentation: an adaptive plan nested in a cache
+    * prints its `== Final Plan ==` sections further left than its own
+    * line. A relation whose copy cannot be matched prints in full. */
+  private[graft] def dedupCachedPlans(plan: SparkPlan): String = {
+    def texts(s: String): Seq[String] =
+      s.linesIterator.toSeq.map(_.dropWhile(ch => " :+-".contains(ch)))
+    // the node texts of every cached plan the dump can print
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean])
+    val cached = scala.collection.mutable.LinkedHashSet.empty[Seq[String]]
+    val aqe = new AdaptiveSparkPlanHelper {}
+    def gather(p: SparkPlan): Unit = aqe.foreach(p) {
+      case s: InMemoryTableScanExec if seen.add(s.relation.cachedPlan) =>
+        cached += texts(s.relation.cachedPlan.toString)
+        gather(s.relation.cachedPlan)
+      case _ =>
+    }
+    gather(plan)
+    val lines = plan.toString.linesIterator.toIndexedSeq
+    val stripped = texts(plan.toString)
+    val ids = scala.collection.mutable.HashMap.empty[Seq[String], Int]
+    val out = scala.collection.mutable.ArrayBuffer.empty[String]
+    var i = 0
+    while (i < lines.length) {
+      val copy = if (!stripped(i).startsWith("InMemoryRelation")) None
+        else cached.filter(c => stripped.slice(i + 1, i + 1 + c.length) == c)
+          .maxByOption(_.length)
+      copy match {
+        case Some(c) if ids.contains(c) =>
+          out += s"${lines(i)} [cached plan #${ids(c)}, printed above]"
+          i += 1 + c.length
+        case Some(c) =>
+          ids(c) = ids.size + 1
+          out += s"${lines(i)} [cached plan #${ids(c)}]"
+          i += 1
+        case None =>
+          out += lines(i)
+          i += 1
+      }
+    }
+    out.mkString("", "\n", "\n")
+  }
+
   /** One query's record: its [[Timing]], external busy share across its
     * reps ([[othersBusyFrac]]), and its min rep's jobs, stages and plan. */
   private[graft] final case class QueryRun(name: String, timing: Timing,
@@ -334,7 +386,7 @@ object Bench {
         val busy = othersBusyFrac(snap0, cpuSnap())
         val best = traces(timing.minRep)
         val run = QueryRun(name, timing, busy, best.jobs, best.stages,
-          best.count.map(_.executedPlan.toString))
+          best.count.map(qe => dedupCachedPlans(qe.executedPlan)))
         // queries that persist intermediates (q28/q29/q52/q53/q55) must
         // not leak cache into LATER queries: CacheManager holds strong
         // refs until an explicit unpersist. Cleared per query (not per

@@ -21,8 +21,20 @@ import org.apache.spark.sql.functions._
   * long, a double, or a nested object depending on the sensor), so the
   * edge is parsed as a Spark 4 VARIANT and extracted with `variant_get`
   * per sensor — schema-on-read hardening into the fixed envelope
-  * `StructType` in one codegen'd projection. No UDFs; the whole transform
-  * is a single `select`, identical in batch and streaming.
+  * `StructType`. No UDFs; the transform is three narrow `select`s,
+  * identical in batch and streaming:
+  *   1. `$.telemetry` → `array<variant>`, once per row;
+  *   2. each of the six sensors' entries (a `filter` over that array),
+  *      once per row;
+  *   3. the fixed envelope over those columns.
+  * Inlined into one projection, every use of an entry re-ran its
+  * `filter` (interpreted, `CodegenFallback`) over a fresh `$.telemetry`
+  * rebuild, which re-encodes all six entries. Battery and barometer
+  * read their entry once, each of the four struct sensors four times (a
+  * null check and three fields): 18 of each per row. Projected
+  * first, there are 6 filters and 1 rebuild; `CollapseProject` keeps
+  * the projections apart because each struct sensor's entry is read
+  * more than once.
   */
 object EnvelopeTransform {
   /** Entry value for sensor `name` in the raw telemetry name/value array,
@@ -51,19 +63,29 @@ object EnvelopeTransform {
       .select(try_parse_json(col(jsonCol)).as("v"))
       .filter(col("v").isNotNull))
 
+  /** The sensors of the fixed `telemetry` struct, in its field order. */
+  private val Sensors = Seq("battery", "barometer", "accelerometer",
+    "gyroscope", "magnetometer", "geolocation")
+
   /** variant column `v` holding the raw envelope → fixed envelope.
     * `keep` columns of `parsed` are passed through untouched (e.g. the
     * verbatim raw line for a bronze archive). */
   def fromVariant(parsed: DataFrame, keep: Seq[String] = Nil): DataFrame = {
     val v = col("v")
-    val tel = variant_get(v, "$.telemetry", "array<variant>")
+    val passed = (keep :+ "v").distinct.map(col)
+    def entryCol(name: String) = col(s"__entry_$name")
+    val entries = parsed
+      .select(passed :+ variant_get(v, "$.telemetry", "array<variant>")
+        .as("__telemetry"): _*)
+      .select(passed ++ Sensors.map(n =>
+        entry(col("__telemetry"), n).as(s"__entry_$n")): _*)
     def sensorStruct(name: String, build: Column => Column): Column = {
-      val e = entry(tel, name)
+      val e = entryCol(name)
       // absent value → null struct (not a struct of nulls): matches the
       // golden output's literal `"accelerometer": null`.
       when(e.isNull, lit(null)).otherwise(build(e))
     }
-    parsed.select(keep.map(col) ++ Seq(
+    entries.select(keep.map(col) ++ Seq(
       lit("default@v1").as("schema"),
       variant_get(v, "$.applicationId", "string").as("applicationId"),
       variant_get(v, "$.device.id", "string").as("deviceId"),
@@ -76,8 +98,8 @@ object EnvelopeTransform {
         .as("messageProperties"),
       variant_get(v, "$.enrichments", "map<string,string>").as("enrichments"),
       struct(
-        variant_get(entry(tel, "battery"), "$", "bigint").as("battery"),
-        variant_get(entry(tel, "barometer"), "$", "double").as("barometer"),
+        variant_get(entryCol("battery"), "$", "bigint").as("battery"),
+        variant_get(entryCol("barometer"), "$", "double").as("barometer"),
         sensorStruct("accelerometer", xyz).cast(Schemas.xyz).as("accelerometer"),
         sensorStruct("gyroscope", xyz).cast(Schemas.xyz).as("gyroscope"),
         sensorStruct("magnetometer", xyz).cast(Schemas.xyz).as("magnetometer"),

@@ -14,9 +14,28 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * Topology: envelope stream → enrich (pure projection) → stateful
   * spike-and-dip (`flatMapGroupsWithState`) → `foreachBatch { persist;
-  * bronze append; devices dedup-merge; telemetry append }`. One scan
-  * per micro-batch feeds all three sinks (ASA's multi-output atomicity,
-  * which separate streaming queries would not give).
+  * telemetry append; then bronze append ∥ devices dedup-merge ∥
+  * quarantine append }`. One scan per micro-batch feeds every sink
+  * (ASA's multi-output atomicity, which separate streaming queries
+  * would not give). Telemetry, the serving table a dashboard reads,
+  * goes first: its write computes the batch into the cache, and it
+  * depends on none of the other sinks, so waiting behind them only
+  * delays it. The other sinks then read the cached batch at the same
+  * time.
+  *
+  * Threads: the concurrent sinks run on threads created inside the
+  * batch ([[writeConcurrently]]). A new thread inherits the stream
+  * thread's Spark local properties, so their jobs carry the query's
+  * `runId` as job group and `StreamingQuery.stop()` cancels them as it
+  * cancels the stream thread's own. The batch returns only after every
+  * sink has finished; the batch is unpersisted after that.
+  *
+  * Failure window: each sink is written once per batch and nothing is
+  * committed before all have finished, so a failed batch is replayed
+  * whole on restart (at-least-once). A failed batch may already have
+  * appended to any subset of the sinks — Telemetry alone, or Telemetry
+  * and any of the others — not, as with one sink after another, to a
+  * prefix of a fixed order.
   *
   * Scale design (100 TB/day stream):
   *  - state is partitioned by device key by default (`perDevice=true`)
@@ -250,7 +269,10 @@ object CuratedPipeline {
           n, org.apache.spark.sql.types.StringType)))
 
   /** Read the devices table's given columns, or None when the table
-    * does not exist yet. Only a genuinely ABSENT table gives None: any
+    * does not exist yet. The read declares [[DevicesSchema]]: inferring
+    * it would cost a Spark job (parquet footer merge) on every batch,
+    * and an empty directory reads as an empty table instead of failing
+    * inference. Only a genuinely ABSENT table gives None: any
     * other read failure (corrupt file, transient FS error) PROPAGATES —
     * both consumers ([[mergeDevices]]'s anti-join and
     * [[enrichWithDevices]]'s left join) would otherwise silently treat
@@ -259,12 +281,15 @@ object CuratedPipeline {
     * error set cannot drift between the two paths. */
   private def readDevices(spark: org.apache.spark.sql.SparkSession,
       devicesDir: String, cols: Seq[String]): Option[DataFrame] =
-    try Some(spark.read.parquet(devicesDir).select(cols.map(col): _*))
+    try Some(spark.read.schema(devicesSchema(cols)).parquet(devicesDir))
     catch {
       case e: org.apache.spark.sql.AnalysisException
-          if Set("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
-            .contains(e.getCondition) => None
+          if e.getCondition == "PATH_NOT_FOUND" => None
     }
+
+  /** [[DevicesSchema]] restricted to `cols`, in their order. */
+  private def devicesSchema(cols: Seq[String]) =
+    org.apache.spark.sql.types.StructType(cols.map(n => DevicesSchema(n)))
 
   /** [[readDevices]], or an empty typed frame when the table is absent. */
   private def devicesOrEmpty(spark: org.apache.spark.sql.SparkSession,
@@ -272,8 +297,7 @@ object CuratedPipeline {
     readDevices(spark, devicesDir, cols).getOrElse(
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(
-          cols.map(n => DevicesSchema(n)))))
+        devicesSchema(cols)))
 
   /** Devices-sink dedup-merge: at-most-one-row-per-device with
     * first-seen-wins (the PK semantics the reference gets from
@@ -389,18 +413,57 @@ object CuratedPipeline {
       .foreachBatch { (batch: Dataset[PipeOut], _: Long) =>
         batch.persist()
         try {
-          // S2 bronze: the VERBATIM input lines, append-only — including
-          // malformed and null-device rows the curated sinks reject.
-          batch.select("raw").write.mode("append").text(bronzeDir)
-          // S3 devices: dedup-merge.
-          mergeDevices(batch.toDF(), devicesDir)
-          // S4 telemetry: enriched + flagged fact rows.
+          // S4 telemetry: enriched + flagged fact rows. First: it
+          // computes the batch into the cache the other sinks read.
           telemetryColumns(batch).write.mode("append").parquet(telemetryDir)
-          // dead-letter: curated rejects with a failure reason.
-          quarantineDir.foreach(quarantineRejects(batch.toDF(), _))
+          writeConcurrently(Seq(
+            // S2 bronze: the VERBATIM input lines, append-only —
+            // including malformed and null-device rows the curated
+            // sinks reject.
+            "bronze" -> (() => batch.select("raw").write.mode("append").text(bronzeDir)),
+            // S3 devices: dedup-merge.
+            "devices" -> (() => mergeDevices(batch.toDF(), devicesDir))) ++
+            // dead-letter: curated rejects with a failure reason.
+            quarantineDir.map(d =>
+              "quarantine" -> (() => quarantineRejects(batch.toDF(), d))))
         } finally batch.unpersist()
         ()
       }
       .start()
+  }
+
+  /** Run each named sink write on its own new thread and return when
+    * all have finished. New threads inherit the caller's Spark local
+    * properties (job group, description, SQL execution id), so in a
+    * `foreachBatch` the writes stay in the query's job group. The first
+    * failure is rethrown with the others attached as suppressed. If the
+    * caller is interrupted (`StreamingQuery.stop()`), the writers are
+    * interrupted and awaited before the interrupt propagates, so no
+    * writer outlives the batch. */
+  private def writeConcurrently(sinks: Seq[(String, () => Unit)]): Unit = {
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+    val threads = sinks.map { case (name, write) =>
+      val t = new Thread(() =>
+        try write() catch { case e: Throwable => failures.add(e) },
+        s"curated-sink-$name")
+      t.setDaemon(true)
+      t
+    }
+    threads.foreach(_.start())
+    try threads.foreach(_.join())
+    catch {
+      case e: InterruptedException =>
+        threads.foreach(_.interrupt())
+        threads.foreach { t =>
+          while (t.isAlive) try t.join() catch { case _: InterruptedException => () }
+        }
+        throw e
+    }
+    val it = failures.iterator()
+    if (it.hasNext) {
+      val first = it.next()
+      it.forEachRemaining(e => first.addSuppressed(e))
+      throw first
+    }
   }
 }

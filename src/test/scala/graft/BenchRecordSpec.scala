@@ -32,4 +32,32 @@ class BenchRecordSpec extends SparkSpec {
     assert(plan.contains("AdaptiveSparkPlan") && plan.contains("isFinalPlan=true"))
     assert(plan.contains("HashAggregate"))
   }
+
+  test("a plan dump prints each distinct cached plan once and refers back to it") {
+    import org.apache.spark.sql.functions.sum
+    // an adaptive plan inside the cache: its sections print out of line
+    val c = spark.range(1000).selectExpr("id % 7 as k", "id as v")
+      .groupBy("k").agg(sum("v").as("v")).cache()
+    try {
+      c.count()
+      val j = c.join(c.groupBy("k").count(), "k")
+      j.collect()
+      val plan = j.queryExecution.executedPlan.toString
+      val deduped = Bench.dedupCachedPlans(j.queryExecution.executedPlan)
+      def count(s: String, what: String) = s.linesIterator.count(_.contains(what))
+      // two scans, in the final and in the initial plan
+      val scans = count(plan, "InMemoryRelation")
+      assert(scans == 4 && count(deduped, "InMemoryRelation") == scans)
+      assert(count(plan, "Range (0, 1000") == scans * count(deduped, "Range (0, 1000"))
+      assert(count(deduped, "Range (0, 1000") > 0)
+      assert(count(deduped, "[cached plan #1]") == 1)
+      assert(count(deduped, "[cached plan #1, printed above]") == scans - 1)
+      // everything outside the repeated copy is kept, in order
+      val kept = plan.linesIterator.toSet
+      assert(deduped.linesIterator.filterNot(_.contains("InMemoryRelation"))
+        .forall(kept.contains))
+      val uncached = spark.range(3).selectExpr("id + 1").queryExecution.executedPlan
+      assert(Bench.dedupCachedPlans(uncached) == uncached.toString)
+    } finally c.unpersist(blocking = true)
+  }
 }
