@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 /** The enrichment projection of the stream-processing stage (reference:
   * `stream-analytics/iot-stream-analytics-query.sql:8-46` CTE
   * `TelemetryWithAnoms`, minus the anomaly scores which are
-  * `graft.anomaly.SpikeAndDip`), plus the two output projections
-  * (:53-61 Devices, :64-83 Telemetry).
+  * `graft.anomaly.SpikeAndDip`), plus the Telemetry output projection
+  * (:64-83; the Devices projection, :53-61, is
+  * `graft.streaming.CuratedPipeline.mergeDevices`).
   *
   * Pure column expressions — whole-stage-codegen end to end, identical in
   * batch and streaming. Nulls propagate (a null axis → null magnitude);
@@ -50,11 +51,4 @@ object Enrich {
       .when(barometerAnom.getField("isAnomaly") === 1, 1)
       .when(accelAnom.getField("isAnomaly") === 1, 1)
       .otherwise(0)
-
-  /** Envelope → Devices dimension projection (S3/P2/P4:
-    * iot-stream-analytics-query.sql:53-61). PK semantics (at most one row
-    * per device) are applied by the sink's dedup-merge, not here. */
-  def devices(env: DataFrame): DataFrame =
-    env.select("deviceId", "applicationId", "templateId", "component", "module")
-      .filter(col("deviceId").isNotNull)
 }

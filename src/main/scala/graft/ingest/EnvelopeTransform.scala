@@ -19,10 +19,14 @@ import org.apache.spark.sql.functions._
   *
   * Spark-first design: the raw JSON is *dynamically typed* (`value` is a
   * long, a double, or a nested object depending on the sensor), so the
-  * edge is parsed as a Spark 4 VARIANT and extracted with `variant_get`
-  * per sensor — schema-on-read hardening into the fixed envelope
-  * `StructType`. No UDFs; the transform is three narrow `select`s,
-  * identical in batch and streaming:
+  * edge is parsed as a Spark 4 VARIANT and extracted with
+  * `try_variant_get` per sensor — schema-on-read hardening into the
+  * fixed envelope `StructType`. A field of the wrong type (a `telemetry`
+  * that is not an array, `"value":"abc"` for a numeric sensor, a
+  * `messageProperties` that is not an object) reads as null, exactly as
+  * a missing one does, instead of failing the query. No UDFs; the
+  * transform is three narrow `select`s, identical in batch and
+  * streaming:
   *   1. `$.telemetry` → `array<variant>`, once per row;
   *   2. each of the six sensors' entries (a `filter` over that array),
   *      once per row;
@@ -42,16 +46,16 @@ object EnvelopeTransform {
     * `try_element_at`: a sensor entirely missing from the array (not just
     * value-less) must surface as null, not an ANSI index error. */
   private def entry(tel: Column, name: String): Column =
-    variant_get(
+    try_variant_get(
       try_element_at(
-        filter(tel, e => variant_get(e, "$.name", "string") === lit(name)),
+        filter(tel, e => try_variant_get(e, "$.name", "string") === lit(name)),
         lit(1)),
       "$.value", "variant")
 
   private def xyz(v: Column): Column = struct(
-    variant_get(v, "$.x", "double").as("x"),
-    variant_get(v, "$.y", "double").as("y"),
-    variant_get(v, "$.z", "double").as("z"))
+    try_variant_get(v, "$.x", "double").as("x"),
+    try_variant_get(v, "$.y", "double").as("y"),
+    try_variant_get(v, "$.z", "double").as("z"))
 
   /** raw JSON string column → fixed envelope columns (FIXTURES.md §A2).
     * `try_parse_json`: a malformed event must not kill a streaming
@@ -75,7 +79,7 @@ object EnvelopeTransform {
     val passed = (keep :+ "v").distinct.map(col)
     def entryCol(name: String) = col(s"__entry_$name")
     val entries = parsed
-      .select(passed :+ variant_get(v, "$.telemetry", "array<variant>")
+      .select(passed :+ try_variant_get(v, "$.telemetry", "array<variant>")
         .as("__telemetry"): _*)
       .select(passed ++ Sensors.map(n =>
         entry(col("__telemetry"), n).as(s"__entry_$n")): _*)
@@ -87,26 +91,27 @@ object EnvelopeTransform {
     }
     entries.select(keep.map(col) ++ Seq(
       lit("default@v1").as("schema"),
-      variant_get(v, "$.applicationId", "string").as("applicationId"),
-      variant_get(v, "$.device.id", "string").as("deviceId"),
-      variant_get(v, "$.device.templateId", "string").as("templateId"),
-      variant_get(v, "$.messageSource", "string").as("messageSource"),
-      variant_get(v, "$.enqueuedTime", "string").as("enqueuedTime"),
-      variant_get(v, "$.component", "string").as("component"),
-      variant_get(v, "$.module", "string").as("module"),
-      variant_get(v, "$.messageProperties", "map<string,string>")
+      try_variant_get(v, "$.applicationId", "string").as("applicationId"),
+      try_variant_get(v, "$.device.id", "string").as("deviceId"),
+      try_variant_get(v, "$.device.templateId", "string").as("templateId"),
+      try_variant_get(v, "$.messageSource", "string").as("messageSource"),
+      try_variant_get(v, "$.enqueuedTime", "string").as("enqueuedTime"),
+      try_variant_get(v, "$.component", "string").as("component"),
+      try_variant_get(v, "$.module", "string").as("module"),
+      try_variant_get(v, "$.messageProperties", "map<string,string>")
         .as("messageProperties"),
-      variant_get(v, "$.enrichments", "map<string,string>").as("enrichments"),
+      try_variant_get(v, "$.enrichments", "map<string,string>")
+        .as("enrichments"),
       struct(
-        variant_get(entryCol("battery"), "$", "bigint").as("battery"),
-        variant_get(entryCol("barometer"), "$", "double").as("barometer"),
+        try_variant_get(entryCol("battery"), "$", "bigint").as("battery"),
+        try_variant_get(entryCol("barometer"), "$", "double").as("barometer"),
         sensorStruct("accelerometer", xyz).cast(Schemas.xyz).as("accelerometer"),
         sensorStruct("gyroscope", xyz).cast(Schemas.xyz).as("gyroscope"),
         sensorStruct("magnetometer", xyz).cast(Schemas.xyz).as("magnetometer"),
         sensorStruct("geolocation", g => struct(
-          variant_get(g, "$.lat", "double").as("lat"),
-          variant_get(g, "$.lon", "double").as("lon"),
-          variant_get(g, "$.alt", "double").as("alt"))).cast(Schemas.geo)
+          try_variant_get(g, "$.lat", "double").as("lat"),
+          try_variant_get(g, "$.lon", "double").as("lon"),
+          try_variant_get(g, "$.alt", "double").as("alt"))).cast(Schemas.geo)
           .as("geolocation"),
       ).as("telemetry"),
     ): _*)

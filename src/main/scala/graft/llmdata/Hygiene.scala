@@ -715,7 +715,7 @@ object Hygiene {
 /** KS split-drift with a scale-aware route switch — the round-10
   * closure of the round-9 verdict item "implement, don't just guard,
   * the q198 envelope": past the cross-multiplied micro regime
-  * (n_tr·n_te > 2⁶³/10⁶, ~3·10⁹ docs per side) the query now SWITCHES
+  * (n_tr·n_te > 2⁶³/10⁶, ~3·10⁶ docs per side) the query now SWITCHES
   * to the documented bounded per-split sample instead of stopping at
   * the loud guard (which stays, for the exact route's own protection —
   * the q171/[[graft.relational.Rfm]] discipline).

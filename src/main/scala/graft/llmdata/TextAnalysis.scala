@@ -863,7 +863,7 @@ object TextAnalysis {
     //      concentration normal, the audit tracks drift). Exact
     //      integer rank formula over the ASCENDING frequency order:
     //      gini = (2·Σ i·x_i − (n+1)·Σx) / (n·Σx) — numerator and
-    //      denominator are exact BIGINTs, one integer-division to
+    //      denominator are exact integers, one integer-division to
     //      micro-units (tie order within equal x cannot change
     //      Σ i·x_i: a tie block contributes x·Σi regardless of
     //      permutation, so the (x, w) tie-break is determinism-only).
@@ -871,15 +871,11 @@ object TextAnalysis {
     //      window runs over the VOCABULARY domain, never the corpus
     //      (q153's low-cardinality exact route — the open-vocabulary
     //      scale path replaces the global window with q86/q98 sketch
-    //      boundaries). Magnitude bound — ASSERTED IN-PLAN (q145
-    //      pattern): |2·Σi·x − (n+1)·Σx| ≤ 2·n·Σx, so micro-scaling
-    //      keeps the numerator < 2^63 while n·Σx ≤ (2^63−1)/(2·10^6)
-    //      ≈ 4.6·10^12. Past it the query SWITCHES (round-11, the
-    //      Conformal/KsDrift discipline) to [[Gini]]'s milli route —
-    //      numerator ·10^3, quotient re-scaled to micro — extending
-    //      the regime 1000×; the guard stays loud on each route's own
-    //      envelope (GiniRouteSpec pins the nested-floor identity
-    //      milli ≡ (micro div 1000)·1000). ----
+    //      boundaries). Magnitude regime: Σi·x and the 10^6-scaled
+    //      numerator and denominator ride DECIMAL(38,0) ([[Gini]]);
+    //      |2·Σi·x − (n+1)·Σx| ≤ 2·n·Σx keeps the numerator below
+    //      10^38 while n·Σx < 5·10^31, ASSERTED IN-PLAN (q145
+    //      pattern), and the quotient (≤ 10^6) returns to BIGINT. ----
     Q(
       "q181_token_gini",
       """WITH tok AS (SELECT unnest(string_split(text, ' ')) AS w
@@ -1133,101 +1129,49 @@ object TextAnalysis {
   )
 }
 
-/** Token-frequency Gini with a scale-aware unit-route switch — the
-  * round-11 closure of "route-switch q181, don't just guard it" (the
-  * [[graft.relational.Conformal]]/[[Hygiene.KsDrift]] discipline).
+/** Token-frequency Gini as one exact fold: token counts →
+  * vocabulary-domain rank window → the integer rank formula
+  * `gini = (2·Σi·x − (n+1)·Σx) / (n·Σx)`, scaled to micro-units before
+  * the single integer division.
   *
-  * Two routes through ONE fold (token counts → vocabulary-domain rank
-  * window → the exact integer rank formula
-  * `gini = (2·Σi·x − (n+1)·Σx) / (n·Σx)`):
-  *
-  *  - '''micro''': the round-9 exact plan — numerator scaled by 10⁶
-  *    before the single integer division, valid while
-  *    `n·Σx ≤ (2⁶³−1)/(2·10⁶)` ≈ 4.6·10¹². The in-plan guard STAYS on
-  *    this route (an explicit micro call past the bound must fail
-  *    loudly, never wrap).
-  *  - '''milli''': past the micro regime the numerator scales by 10³
-  *    instead and the quotient is re-scaled to micro units (`·10³`),
-  *    extending the regime 1000× to `n·Σx ≤ (2⁶³−1)/(2·10³)` ≈
-  *    4.6·10¹⁵ (e.g. 10⁸ types × 4.6·10⁷ occurrences/type) at the
-  *    price of the last three digits. Floor algebra makes the routes
-  *    NESTED, not merely close: `⌊⌊N·10⁶/D⌋/10³⌋ = ⌊N·10³/D⌋`, so
-  *    milli ≡ (micro div 1000)·1000 EVERYWHERE both are defined —
-  *    GiniRouteSpec pins exactly that identity. The milli route's own
-  *    envelope stays loud; past IT the upgrade is q86/q98 sketch
-  *    boundaries (documented, not silently approximated here).
-  *
-  * Switch: "auto" reads (n, Σx) off the persisted count table (one
-  * 1-row driver scalar — the [[Hygiene.KsDrift]] shape) and takes the
-  * exact micro route while the product fits, milli past it. */
+  * Σi·x and the scaled numerator and denominator are DECIMAL(38,0)
+  * (the q136 discipline). `|2·Σi·x − (n+1)·Σx| ≤ 2·n·Σx`, so the
+  * numerator ·10⁶ stays below 10³⁸ while `n·Σx < 5·10³¹`: that is the
+  * in-plan guard, loud past it (the upgrade there is q86/q98 sketch
+  * boundaries, not a silent approximation). The quotient is at most
+  * 10⁶ and returns to BIGINT: the float policy bans DECIMAL output
+  * columns. */
 object Gini {
   import org.apache.spark.sql.DataFrame
 
-  /** Micro route regime: n·Σx ≤ (2⁶³−1) / (2·10⁶). */
-  val MicroBound: Long = Long.MaxValue / 2000000L
+  /** Exclusive bound on n·Σx: the numerator's DECIMAL(38,0) envelope. */
+  private[llmdata] val Envelope: BigInt = BigInt(5) * BigInt(10).pow(31)
 
-  /** Milli route regime: n·Σx ≤ (2⁶³−1) / (2·10³). */
-  val MilliBound: Long = Long.MaxValue / 2000L
-
-  /** The route "auto" picks for exact counts (n, Σx) — pure, so the
-    * spec pins the switch point with synthetic magnitudes no test
-    * corpus can reach. Overflow-free product test (the
-    * [[graft.ScaleGuards.productWithin]] identity, driver-side). */
-  def route(n: Long, total: Long): String =
-    if (n == 0L || total == 0L || total <= MicroBound / n) "micro"
-    else "milli"
-
-  /** The token count table both routes fold: (w, x). */
-  def counts(docs: DataFrame): DataFrame =
-    docs.select(explode(split(col("text"), " ")).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("x"))
-
-  /** The shared fold: ascending-frequency rank window over the
-    * VOCABULARY domain (never the corpus — q153's exact route), then
-    * the guarded unit-scaled division. `unit` ∈ {10⁶, 10³}; the output
-    * is ALWAYS micro-units (`gini_micro`), the milli route re-scales
-    * its coarser quotient. */
-  private def fold(cnt: DataFrame, unit: Long, bound: Long,
-      msg: String): DataFrame = {
-    val rescale = 1000000L / unit
-    cnt
+  /** The fold over a (w, x) token count table: ascending-frequency rank
+    * window over the VOCABULARY domain (never the corpus — q153's
+    * exact route), then [[quotient]]. */
+  private[llmdata] def fold(cnt: DataFrame): DataFrame =
+    quotient(cnt
       .withColumn("i", row_number().over(
         Window.orderBy(col("x"), col("w"))).cast("long"))
       .agg(count(lit(1)).as("n"), sum("x").as("total"),
-        sum(col("i") * col("x")).as("six"))
-      .select(col("n"), col("total"),
-        graft.ScaleGuards.guarded(
-          graft.ScaleGuards.productWithin("n", "total", bound),
-          msg,
-          expr(s"CAST(((2 * six - (n + 1) * total) * ${unit}L div " +
-            s"(n * total)) * ${rescale}L AS BIGINT)")).as("gini_micro"))
-  }
+        sum(col("i").cast("decimal(38,0)") * col("x"))
+          .cast("decimal(38,0)").as("six")))
 
-  def micro(cnt: DataFrame): DataFrame =
-    fold(cnt, 1000000L, MicroBound,
-      "q181: n*total exceeds the micro magnitude regime - the Gini " +
-        "numerator *10^6 would overflow 2^63; the milli route " +
-        "(Gini.gini route=auto switches for you) extends the regime " +
-        "1000x")
+  /** (n, total, six) → (n, total, gini_micro), guarded at [[Envelope]]. */
+  private[llmdata] def quotient(sums: DataFrame): DataFrame =
+    sums.select(col("n"), col("total"),
+      graft.ScaleGuards.guarded(
+        // NULL counts (an empty corpus) pass, as in ScaleGuards.productWithin
+        expr(s"coalesce(CAST(n AS DECIMAL(38,0)) * total < ${Envelope}BD, true)"),
+        "q181: n*total exceeds 5*10^31 - the Gini numerator *10^6 would " +
+          "overflow DECIMAL(38,0); drop to q86/q98 sketch boundaries",
+        expr("CAST((2 * six - (CAST(n AS DECIMAL(38,0)) + 1) * total) " +
+          "* 1000000 div (CAST(n AS DECIMAL(38,0)) * total) AS BIGINT)"))
+        .as("gini_micro"))
 
-  def milli(cnt: DataFrame): DataFrame =
-    fold(cnt, 1000L, MilliBound,
-      "q181 milli route: n*total exceeds even the milli magnitude " +
-        "regime - drop to q86/q98 sketch boundaries")
-
-  /** q181's entry point: route ∈ auto | micro | milli. */
-  def gini(docs: DataFrame, routeArg: String = "auto"): DataFrame = {
-    val cnt = graft.Caches.persist(counts(docs))
-    val chosen = routeArg match {
-      case "micro" | "milli" => routeArg
-      case "auto" =>
-        val r = cnt.agg(
-          coalesce(count(lit(1)), lit(0L)).as("n"),
-          coalesce(sum("x"), lit(0L)).cast("long").as("total")).head()
-        route(r.getLong(0), r.getLong(1))
-      case other =>
-        throw new IllegalArgumentException(s"unknown gini route: $other")
-    }
-    if (chosen == "micro") micro(cnt) else milli(cnt)
-  }
+  /** q181's entry point. */
+  def gini(docs: DataFrame): DataFrame =
+    fold(docs.select(explode(split(col("text"), " ")).as("w"))
+      .groupBy("w").agg(count(lit(1)).as("x")))
 }

@@ -577,16 +577,12 @@ object Stats {
     //      Σ pos_v · (negatives strictly below v) ride ONE cumulative
     //      window over that domain, ties take the standard half
     //      credit (2·conc + tied, halved inside the micro division).
-    //      BIGINT magnitude regime — ASSERTED IN-PLAN (q145 pattern):
-    //      (2·conc + tied)·5·10^5 ≤ 3·n_pos·n_neg·5·10^5 stays below
-    //      2^63 while n_pos·n_neg ≤ (2^63−1)/(1.5·10^6) ≈ 6.1·10^12
-    //      (~2.5·10^6 docs per class). Past it the query SWITCHES
-    //      (round-11, the Conformal/KsDrift discipline) to [[Auc]]'s
-    //      DECIMAL(38,0) route — exact pair sums at 10^38 headroom,
-    //      integral div back to BIGINT — whose own loud envelope is
-    //      the conc/tied OUTPUT columns' BIGINT bound (10^6× further);
-    //      AucRouteSpec pins the routes row-identical in the micro
-    //      regime. ----
+    //      Magnitude regime: the pair sums and the scaled numerator
+    //      ride DECIMAL(38,0) ([[Auc]], the q136 discipline), so the
+    //      arithmetic is exact until n_pos·n_neg ≈ 6.6·10^31; the
+    //      in-plan guard (q145 pattern) sits at the conc/tied OUTPUT
+    //      columns' own BIGINT bound, n_pos·n_neg ≤ 2^63−1 (~3·10^9
+    //      docs per class). ----
     Q(
       "q182_auc_rank",
       """WITH s AS (SELECT n_chars AS v,
@@ -1569,92 +1565,38 @@ object Conformal {
   }
 }
 
-/** ROC-AUC (rank statistic) with a scale-aware arithmetic-route switch
-  * — the round-11 closure of "route-switch q182, don't just guard it"
-  * (the [[Conformal]]/[[graft.llmdata.Hygiene.KsDrift]] discipline).
+/** ROC-AUC (rank statistic) as one exact fold: the per-value
+  * (pos, neg) histogram → the cumulative-negatives window over the
+  * value DOMAIN → concordant/tied pair sums → the half-credit micro
+  * division.
   *
-  * Two routes through ONE fold (per-value (pos, neg) histogram → the
-  * cumulative-negatives window over the value DOMAIN → concordant/tied
-  * pair sums → the half-credit micro division):
-  *
-  *  - '''micro''': the round-9 exact BIGINT plan, valid while
-  *    `(2·conc + tied)·5·10⁵ ≤ 3·n_pos·n_neg·5·10⁵ < 2⁶³`, i.e.
-  *    `n_pos·n_neg ≤ (2⁶³−1)/(1.5·10⁶)` ≈ 6.1·10¹². The in-plan guard
-  *    STAYS on this route.
-  *  - '''decimal''': past the micro regime the three pair sums ride
-  *    DECIMAL(38,0) — the q136 discipline: integer-EXACT at 10³⁸
-  *    headroom, so `(2·conc + tied)·5·10⁵` cannot overflow until
-  *    n_pos·n_neg ≈ 6.6·10³¹ — and the quotient (≤ 10⁶) returns to
-  *    BIGINT through Spark's integral `div`. The route's OWN loud
-  *    envelope is the OUTPUT schema: conc/tied are BIGINT columns, so
-  *    `n_pos·n_neg ≤ 2⁶³−1` (≈ 3·10⁹ docs per class, 10⁶× past the
-  *    micro bound) is guarded in-plan; past it the report columns
-  *    themselves no longer fit and the honest upgrade is dropping
-  *    conc/tied from the contract, not silently rescaling them.
-  *
-  * Both routes are exact integer arithmetic over identical operands,
-  * so inside the micro regime they are ROW-IDENTICAL (AucRouteSpec
-  * pins it); the switch changes only which overflow envelope applies.
-  *
-  * Switch: "auto" reads (n_pos, n_neg) off the persisted histogram
-  * (one 1-row driver scalar) and takes the micro route while the
-  * product fits, decimal past it. */
+  * The pair sums (and the scaled numerator / divisor) are DECIMAL(38,0)
+  * — the q136 discipline: integer-EXACT at 10³⁸ headroom, so
+  * `(2·conc + tied)·5·10⁵` cannot overflow until n_pos·n_neg ≈
+  * 6.6·10³¹ — and the quotient (≤ 10⁶) returns to BIGINT through
+  * Spark's integral `div`. The loud envelope is the OUTPUT schema:
+  * conc/tied are BIGINT columns, so `n_pos·n_neg ≤ 2⁶³−1` (≈ 3·10⁹
+  * docs per class) is guarded in-plan; past it the report columns
+  * themselves no longer fit and the honest upgrade is dropping
+  * conc/tied from the contract, not silently rescaling them. */
 object Auc {
   import org.apache.spark.sql.DataFrame
 
-  /** Micro route regime: n_pos·n_neg ≤ (2⁶³−1)/(1.5·10⁶). */
-  val MicroBound: Long = Long.MaxValue / 1500000L
-
-  /** The route "auto" picks for exact class-pair counts — pure, so the
-    * spec pins the switch point with magnitudes no test corpus can
-    * reach (overflow-free product test). */
-  def route(nPos: Long, nNeg: Long): String =
-    if (nPos == 0L || nNeg == 0L || nNeg <= MicroBound / nPos) "micro"
-    else "decimal"
-
-  /** The per-value class histogram both routes fold: (v, np, nn) —
-    * the corpus-sized shuffle; everything after runs on the value
-    * DOMAIN (q153's exact route). */
-  def hist(docs: DataFrame): DataFrame =
+  /** The per-value class histogram the fold reads: (v, np, nn) — the
+    * corpus-sized shuffle; everything after runs on the value DOMAIN
+    * (q153's exact route). */
+  private def hist(docs: DataFrame): DataFrame =
     docs.groupBy(col("n_chars").as("v"))
       .agg(sum(when(col("lang") === "en", 1L).otherwise(0L)).as("np"),
         sum(when(col("lang") === "en", 0L).otherwise(1L)).as("nn"))
 
-  private def cumulative(h: DataFrame): DataFrame = {
-    val w = Window.orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    h.withColumn("cum_neg", coalesce(sum("nn").over(w), lit(0L)))
-  }
-
-  /** Exact BIGINT route — the round-9 body, guard included. */
-  def aucMicro(h: DataFrame): DataFrame =
-    cumulative(h)
-      .agg(sum("np").cast("long").as("n_pos"),
-        sum("nn").cast("long").as("n_neg"),
-        sum(col("np") * col("cum_neg")).cast("long").as("conc"),
-        sum(col("np") * col("nn")).cast("long").as("tied"))
-      .select(col("n_pos"), col("n_neg"), col("conc"), col("tied"),
-        graft.ScaleGuards.guarded(
-          graft.ScaleGuards.productWithin("n_pos", "n_neg", MicroBound),
-          "q182: n_pos*n_neg exceeds the BIGINT micro regime - " +
-            "(2*conc + tied)*500000 would overflow 2^63; the DECIMAL(38) " +
-            "route (Auc.auc route=auto switches for you) extends the " +
-            "regime to the output columns' own BIGINT bound",
-          // single-class corpus: n_pos*n_neg = 0 passes the guard
-          // (zero short-circuit) but must emit NULL like the oracle,
-          // not an ANSI DIVIDE_BY_ZERO - the round-9 rule: zero-capable
-          // divisors carry nullif on BOTH sides
-          expr("(2 * conc + tied) * 500000 " +
-            "div nullif(n_pos * n_neg, 0)")
-            .cast("long")).as("auc_micro"))
-
-  /** DECIMAL(38,0) route: the pair sums (and the final scaled
-    * numerator / divisor) are exact decimals; only the bounded
-    * quotient and the guarded report columns return to BIGINT. The
-    * per-value products cast BEFORE multiplying — np·cum_neg can
-    * overflow BIGINT exactly in the regime this route exists for. */
-  def aucDecimal(h: DataFrame): DataFrame =
-    cumulative(h)
+  /** The fold over a (v, np, nn) histogram. The per-value products
+    * cast BEFORE multiplying: past the envelope np·cum_neg can overflow
+    * BIGINT, and the query must fail at the guard's message, not with
+    * an anonymous overflow inside the sum. */
+  private[relational] def fold(h: DataFrame): DataFrame =
+    h.withColumn("cum_neg", coalesce(sum("nn").over(Window.orderBy("v")
+        .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       .agg(sum("np").cast("long").as("n_pos"),
         sum("nn").cast("long").as("n_neg"),
         sum(col("np").cast("decimal(38,0)") * col("cum_neg"))
@@ -1664,28 +1606,17 @@ object Auc {
       .select(col("n_pos"), col("n_neg"),
         graft.ScaleGuards.guarded(
           graft.ScaleGuards.productWithin("n_pos", "n_neg", Long.MaxValue),
-          "q182 decimal route: n_pos*n_neg exceeds BIGINT - the conc/" +
-            "tied report columns themselves no longer fit the output " +
-            "schema; drop them from the contract before going bigger",
+          "q182: n_pos*n_neg exceeds BIGINT - the conc/tied report " +
+            "columns themselves no longer fit the output schema; drop " +
+            "them from the contract before going bigger",
           col("conc_d").cast("long")).as("conc"),
         col("tied_d").cast("long").as("tied"),
+        // single-class corpus: n_pos*n_neg = 0 must emit NULL like the
+        // oracle, not an ANSI DIVIDE_BY_ZERO
         expr("(2 * conc_d + tied_d) * 500000 " +
           "div nullif(CAST(n_pos AS DECIMAL(38,0)) * n_neg, 0)")
           .cast("long").as("auc_micro"))
 
-  /** q182's entry point: route ∈ auto | micro | decimal. */
-  def auc(docs: DataFrame, routeArg: String = "auto"): DataFrame = {
-    val h = graft.Caches.persist(hist(docs))
-    val chosen = routeArg match {
-      case "micro" | "decimal" => routeArg
-      case "auto" =>
-        val r = h.agg(
-          coalesce(sum("np"), lit(0L)).cast("long").as("n_pos"),
-          coalesce(sum("nn"), lit(0L)).cast("long").as("n_neg")).head()
-        route(r.getLong(0), r.getLong(1))
-      case other =>
-        throw new IllegalArgumentException(s"unknown auc route: $other")
-    }
-    if (chosen == "micro") aucMicro(h) else aucDecimal(h)
-  }
+  /** q182's entry point. */
+  def auc(docs: DataFrame): DataFrame = fold(hist(docs))
 }

@@ -143,7 +143,7 @@ object CuratedPipeline {
         col("rawLine").as("raw"),
         col("deviceId"),
         col("applicationId"), col("templateId"), col("component"), col("module"),
-        to_timestamp(col("enqueuedTime")).as("enqueuedTime"),
+        try_to_timestamp(col("enqueuedTime")).as("enqueuedTime"),
         col("telemetry.battery").as("battery"),
         col("telemetry.barometer").as("barometer"),
         col("telemetry.geolocation.lat").as("latitude"),

@@ -1,79 +1,69 @@
 package graft.llmdata
 
 import graft.Tables
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
-/** Gates for q181's scale-aware unit-route switch (round-11: the
-  * round-10 loud guard turned into an answer — the Conformal/KsDrift
-  * discipline). Load-bearing properties: the nested-floor identity
-  * `milli ≡ (micro div 1000)·1000` holds wherever both routes are
-  * defined, the auto switch picks micro in the exact regime (pinned on
-  * the PURE route function at magnitudes no test corpus can reach, the
-  * overflow-free product test), and each route's own guard stays
-  * loud. */
+/** Gates for q181's single DECIMAL(38,0) Gini fold: exact against
+  * big-integer arithmetic far past where a BIGINT numerator overflows,
+  * the registry answer unchanged, no DECIMAL in the contract, and the
+  * in-plan guard loud at its own envelope. */
 class GiniRouteSpec extends graft.SparkSpec {
   private val sf = "/root/testdata/sf0.01"
 
-  test("milli route is the micro route floored to milli precision (nested-floor identity)") {
-    val docs = Tables.documents(spark, sf)
-    val m = Gini.gini(docs, "micro").collect()
-    val k = Gini.gini(docs, "milli").collect()
-    assert(m.length == 1 && k.length == 1)
-    assert(m(0).getLong(0) == k(0).getLong(0), "n must agree")
-    assert(m(0).getLong(1) == k(0).getLong(1), "total must agree")
-    val micro = m(0).getLong(2)
-    val milli = k(0).getLong(2)
-    assert(milli == (micro / 1000L) * 1000L,
-      s"floor(floor(N*10^6/D)/10^3)*10^3 must equal the milli route " +
-        s"(micro=$micro, milli=$milli)")
-    assert(micro > 0L, "fixture corpus must have nonzero concentration")
+  /** The rank formula in big integers over (w, x), ascending (x, w). */
+  private def exact(cnt: Seq[(String, Long)]): Row = {
+    val xs = cnt.sortBy(c => (c._2, c._1)).map(c => BigInt(c._2))
+    val n = BigInt(xs.size)
+    val total = xs.sum
+    val six = xs.zipWithIndex.map { case (x, i) => x * (i + 1) }.sum
+    Row(n.toLong, total.toLong,
+      ((2 * six - (n + 1) * total) * 1000000 / (n * total)).toLong)
   }
 
-  test("routes share one output schema") {
-    val docs = Tables.documents(spark, sf)
-    assert(Gini.gini(docs, "micro").schema == Gini.gini(docs, "milli").schema)
+  test("the output schema has no DECIMAL column") {
+    val s = Gini.gini(Tables.documents(spark, sf)).schema
+    assert(s.fields.map(f => (f.name, f.dataType)).toSeq ==
+      Seq("n" -> LongType, "total" -> LongType, "gini_micro" -> LongType),
+      "the registry float policy bans DECIMAL output columns")
   }
 
-  test("auto picks micro in the exact regime; the pure switch flips exactly at the bound") {
-    val docs = Tables.documents(spark, sf)
-    assert(Gini.gini(docs, "auto").collect().toSeq ==
-      Gini.gini(docs, "micro").collect().toSeq,
-      "sf0.01 is deep inside the micro regime — auto must be micro")
-    // the switch point, at magnitudes only the pure function can reach
-    assert(Gini.route(1L, Gini.MicroBound) == "micro")
-    assert(Gini.route(1L, Gini.MicroBound + 1L) == "milli")
-    assert(Gini.route(Gini.MicroBound, 1L) == "micro")
-    assert(Gini.route(2L, Gini.MicroBound) == "milli")
-    // overflow-free at the extremes; empty corpus degenerates to micro
-    assert(Gini.route(Long.MaxValue, Long.MaxValue) == "milli")
-    assert(Gini.route(0L, 0L) == "micro")
+  test("sf0.01 answer unchanged: n 31, total 27165, gini_micro 49033") {
+    assert(Gini.gini(Tables.documents(spark, sf)).collect().toSeq ==
+      Seq(Row(31L, 27165L, 49033L)))
   }
 
-  test("each route's guard stays loud past its own envelope") {
+  test("count tables past the old BIGINT bounds equal big-integer arithmetic") {
     val sp = spark
     import sp.implicits._
-    def fires(body: => Any, frag: String): Unit = {
-      val e = intercept[Throwable] { body }
-      def messages(t: Throwable): Seq[String] =
-        if (t == null) Seq.empty
-        else Option(t.getMessage).toSeq ++ messages(t.getCause)
-      assert(messages(e).exists(_.contains(frag)),
-        s"expected a loud '$frag' failure, got: $e")
+    // n·Σx ≈ 3·10^13 (past the old 4.6·10^12 micro bound) and ≈ 4·10^18
+    // (past 4.6·10^15, where a 10^3-scaled BIGINT numerator overflows too)
+    for (cnt <- Seq(
+        Seq("a" -> 1000000000007L, "b" -> 2000000000003L,
+          "c" -> 3999999999989L, "d" -> 17L),
+        Seq("a" -> 250000000000000001L, "b" -> 123456789L,
+          "c" -> 250000000000000003L, "d" -> 499999999999999999L))) {
+      val want = exact(cnt)
+      assert(want.getLong(2) % 1000L != 0L,
+        "fixture must need all six micro digits")
+      assert(Gini.fold(cnt.toDF("w", "x")).collect().toSeq == Seq(want))
     }
-    // expression-level probes at both sides of each bound (the
-    // ScaleGuardSpec method — real data cannot reach 2^63)
-    def probe(bound: Long, n: Long, total: Long, msg: String) =
-      Seq((n, total)).toDF("n", "total")
-        .select(graft.ScaleGuards.guarded(
-          graft.ScaleGuards.productWithin("n", "total", bound),
-          msg, lit(1L)).as("v")).collect()
-    assert(probe(Gini.MicroBound, 1000000L, 4000000L, "x")(0)
-      .getLong(0) == 1L)
-    fires(probe(Gini.MicroBound, 1000000L, 46000000L,
-      "q181: micro envelope"), "q181: micro envelope")
-    assert(probe(Gini.MilliBound, 1000000L, 4000000000L, "x")(0)
-      .getLong(0) == 1L, "1000x past the micro bound fits milli")
-    fires(probe(Gini.MilliBound, 1000000000L, 46000000000L,
-      "q181 milli envelope"), "q181 milli envelope")
+  }
+
+  test("the guard passes n*total just under 5*10^31 and fails at it") {
+    val sp = spark
+    import sp.implicits._
+    val n = BigInt(10).pow(13)
+    // Σi·x = n·Σx, the most a count table allows: the numerator ·10^6 is
+    // then ~5·10^37, still exact in DECIMAL(38,0)
+    def run(total: BigInt) = Seq((n.toLong, total.toLong, (n * total).toString))
+      .toDF("n", "total", "six").withColumn("six", col("six").cast("decimal(38,0)"))
+      .transform(Gini.quotient).collect().toSeq
+    val inside = Gini.Envelope / n - 1
+    assert(run(inside) == Seq(Row(n.toLong, inside.toLong, 999999L)))
+    val e = intercept[Throwable](run(Gini.Envelope / n))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("q181: n*total exceeds")), e)
   }
 }

@@ -1,91 +1,72 @@
 package graft.relational
 
 import graft.Tables
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.types.LongType
 
-/** Gates for q182's scale-aware arithmetic-route switch (round-11: the
-  * round-10 loud guard turned into an answer — the Conformal/KsDrift
-  * discipline). Load-bearing properties: the micro (BIGINT) and
-  * decimal (DECIMAL(38,0)) routes are ROW-IDENTICAL in the micro
-  * regime (both are exact integer arithmetic over the same operands),
-  * auto picks micro there (pinned on the PURE route function at
-  * magnitudes no corpus can reach), the degenerate single-class corpus
-  * emits NULL on both routes (never an ANSI divide-by-zero), and each
-  * route's guard stays loud past its own envelope. */
+/** Gates for q182's single DECIMAL(38,0) AUC fold: exact against
+  * big-integer arithmetic far past where a BIGINT numerator overflows,
+  * the registry answer unchanged, no DECIMAL in the contract, NULL (not
+  * a divide-by-zero) on a single-class corpus, and the in-plan guard
+  * loud at the report columns' own BIGINT bound. */
 class AucRouteSpec extends graft.SparkSpec {
   private val sf = "/root/testdata/sf0.01"
 
-  test("micro and decimal routes are row-identical in the micro regime") {
-    val docs = Tables.documents(spark, sf)
-    val m = Auc.auc(docs, "micro").collect()
-    val d = Auc.auc(docs, "decimal").collect()
-    assert(m.length == 1 && m.toSeq == d.toSeq,
-      s"exact integer arithmetic must agree across carriers " +
-        s"(micro=${m.toSeq}, decimal=${d.toSeq})")
-    assert(m(0).getLong(4) > 0L, "fixture corpus must have signal")
+  /** The fold in big integers over (v, np, nn) histogram rows. */
+  private def exact(h: Seq[(Long, Long, Long)]): Row = {
+    var cum, conc, tied = BigInt(0)
+    for ((_, np, nn) <- h.sortBy(_._1)) {
+      conc += BigInt(np) * cum
+      tied += BigInt(np) * nn
+      cum += nn
+    }
+    val (p, n) = (BigInt(h.map(_._2).sum), BigInt(h.map(_._3).sum))
+    Row(p.toLong, n.toLong, conc.toLong, tied.toLong,
+      ((2 * conc + tied) * 500000 / (p * n)).toLong)
   }
 
-  test("routes share one output schema (decimal never leaks to the contract)") {
-    val docs = Tables.documents(spark, sf)
-    val ms = Auc.auc(docs, "micro").schema
-    val ds = Auc.auc(docs, "decimal").schema
-    assert(ms.fields.map(f => (f.name, f.dataType)).toSeq ==
-      ds.fields.map(f => (f.name, f.dataType)).toSeq,
-      "the registry float policy bans DECIMAL output columns — the " +
-        "decimal route must cast every report column back to BIGINT")
+  private def fold(h: Seq[(Long, Long, Long)]): Seq[Row] = {
+    val sp = spark
+    import sp.implicits._
+    Auc.fold(h.toDF("v", "np", "nn")).collect().toSeq
   }
 
-  test("auto picks micro in the exact regime; the pure switch flips exactly at the bound") {
-    val docs = Tables.documents(spark, sf)
-    assert(Auc.auc(docs, "auto").collect().toSeq ==
-      Auc.auc(docs, "micro").collect().toSeq)
-    assert(Auc.route(1L, Auc.MicroBound) == "micro")
-    assert(Auc.route(1L, Auc.MicroBound + 1L) == "decimal")
-    assert(Auc.route(2L, Auc.MicroBound) == "decimal")
-    assert(Auc.route(Long.MaxValue, Long.MaxValue) == "decimal")
-    assert(Auc.route(0L, Long.MaxValue) == "micro",
-      "a single-class corpus has zero pairs — trivially in regime")
+  test("the output schema has no DECIMAL column") {
+    val s = Auc.auc(Tables.documents(spark, sf)).schema
+    assert(s.fields.map(f => (f.name, f.dataType)).toSeq ==
+      Seq("n_pos", "n_neg", "conc", "tied", "auc_micro").map(_ -> LongType),
+      "the registry float policy bans DECIMAL output columns")
   }
 
-  test("single-class corpus emits NULL auc on BOTH routes, never a divide-by-zero") {
+  test("sf0.01 answer unchanged: 218, 282, 30085, 117, 490329") {
+    assert(Auc.auc(Tables.documents(spark, sf)).collect().toSeq ==
+      Seq(Row(218L, 282L, 30085L, 117L, 490329L)))
+  }
+
+  test("a histogram past the old BIGINT bound equals big-integer arithmetic") {
+    // n_pos·n_neg ≈ 6.3·10^13, past the old 6.1·10^12 micro bound
+    val h = Seq((10L, 3000000L, 1000000L), (20L, 1000000L, 4000007L),
+      (30L, 5000003L, 2000000L), (40L, 7L, 11L))
+    assert(fold(h) == Seq(exact(h)))
+  }
+
+  test("single-class corpus emits NULL auc_micro, never a divide-by-zero") {
     val sp = spark
     import sp.implicits._
     val docs = Seq((1L, "en", 10L), (2L, "en", 20L))
       .toDF("doc_id", "lang", "n_chars")
-    for (route <- Seq("micro", "decimal")) {
-      val r = Auc.auc(docs, route).collect()
-      assert(r.length == 1, s"$route must emit the degenerate row")
-      assert(r(0).isNullAt(4), s"$route must emit NULL auc_micro")
-      assert(r(0).getLong(1) == 0L, "n_neg = 0")
-    }
+    assert(Auc.auc(docs).collect().toSeq == Seq(Row(2L, 0L, 0L, 0L, null)))
   }
 
-  test("each route's guard stays loud past its own envelope") {
-    val sp = spark
-    import sp.implicits._
-    def fires(body: => Any, frag: String): Unit = {
-      val e = intercept[Throwable] { body }
-      def messages(t: Throwable): Seq[String] =
-        if (t == null) Seq.empty
-        else Option(t.getMessage).toSeq ++ messages(t.getCause)
-      assert(messages(e).exists(_.contains(frag)),
-        s"expected a loud '$frag' failure, got: $e")
-    }
-    def probe(bound: Long, np: Long, nn: Long, msg: String) =
-      Seq((np, nn)).toDF("n_pos", "n_neg")
-        .select(graft.ScaleGuards.guarded(
-          graft.ScaleGuards.productWithin("n_pos", "n_neg", bound),
-          msg, lit(1L)).as("v")).collect()
-    // micro: ~2.4M per class passes, 10^7 per class fires
-    assert(probe(Auc.MicroBound, 2400000L, 2400000L, "x")(0)
-      .getLong(0) == 1L)
-    fires(probe(Auc.MicroBound, 10000000L, 10000000L,
-      "q182: micro envelope"), "q182: micro envelope")
-    // decimal: 10^6x past the micro bound passes (3*10^9 per class);
-    // past the output columns' own BIGINT bound fires
-    assert(probe(Long.MaxValue, 3000000000L, 3000000000L, "x")(0)
-      .getLong(0) == 1L)
-    fires(probe(Long.MaxValue, Long.MaxValue / 2L, 3L,
-      "q182 decimal envelope"), "q182 decimal envelope")
+  test("the guard passes n_pos*n_neg = 2^63-1 and fails one past it") {
+    // 2^63−1 = 153092023 · 60247241209; every positive above every
+    // negative makes conc the product itself, the largest BIGINT
+    val (np, nn) = (153092023L, 60247241209L)
+    assert(BigInt(np) * nn == BigInt(Long.MaxValue))
+    val edge = Seq((1L, 0L, nn), (2L, np, 0L))
+    assert(fold(edge) == Seq(Row(np, nn, Long.MaxValue, 0L, 1000000L)))
+    val e = intercept[Throwable](fold(Seq((1L, 0L, nn + 1), (2L, np, 0L))))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("q182: n_pos*n_neg exceeds")), e)
   }
 }

@@ -52,6 +52,33 @@ class CuratedSinksSpec extends SparkSpec {
     assert(sinkThreads().isEmpty, sinkThreads())
   }
 
+  test("mistyped values in valid JSON read as null: the batch commits with every line in bronze") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("mistyped")
+    def line(dev: String, rest: String) =
+      s"""{"device":{"id":"$dev"},"enqueuedTime":"2024-01-01T00:00:01Z",$rest}"""
+    val lines = Seq(line("devT", """"telemetry":{"battery":5}"""),
+      line("devV", """"telemetry":[{"name":"battery","value":"abc"},""" +
+        """{"name":"barometer","value":"abc"}]"""),
+      line("devM", """"messageProperties":[1,2]"""),
+      rawJson("devE", "not a time", 90),
+      rawJson("devA", "2024-01-01T00:00:02Z", 90), "NOT JSON")
+    val input = MemoryStream[String](spark)
+    val q = CuratedPipeline.start(input.toDF(),
+      s"$dir/bronze", s"$dir/devices", s"$dir/telemetry", s"$dir/ckpt",
+      trigger = Trigger.ProcessingTime(0))
+    try { input.addData(lines: _*); q.processAllAvailable() } finally q.stop()
+    assert(java.nio.file.Files.exists(dir.resolve("ckpt/commits/0")))
+    assert(spark.read.text(s"$dir/bronze").as[String].collect().sorted.toSeq ==
+      lines.sorted)
+    // every line with a deviceId; a mistyped field is null like a missing one
+    val tel = spark.read.parquet(s"$dir/telemetry")
+      .select("deviceId", "battery", "enqueuedTime").collect()
+      .map(r => (r.getString(0), Option(r.get(1)), r.isNullAt(2))).sortBy(_._1).toSeq
+    assert(tel == Seq(("devA", Some(90L), false), ("devE", Some(90L), true),
+      ("devM", None, false), ("devT", None, false), ("devV", None, false)))
+  }
+
   test("every job a batch starts, on any sink thread, runs in the query's job group") {
     import spark.implicits._
     // every job started while the query runs: the test starts none
