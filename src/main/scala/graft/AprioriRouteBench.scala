@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * per-basket C(b,3) explosion was argued from arithmetic, not
   * measured. This main builds a deterministic synthetic basket table
   * with max basket length ≥ 64 (no testdata table has that shape),
-  * runs [[graft.relational.Apriori.triples]] under BOTH forced routes
+  * runs [[graft.relational.Apriori.triples]] under BOTH counting plans
   * on the SAME persisted input, and prints one JSON line with both
   * walls — the SCALE.md datapoint that turns the crossover reasoning
   * into a number.
@@ -63,10 +63,7 @@ object AprioriRouteBench {
         .select(col("bid"),
           floor(col("u") * col("u") * catalog).cast("long").as("item"))
         .distinct())
-    val prof = items.groupBy("bid").agg(count(lit(1)).as("b"))
-      .agg(count(lit(1)).as("baskets"), max("b").as("max_b")).head()
-    val baskets = prof.getLong(0)
-    val maxB = prof.getLong(1)
+    val (baskets, maxB) = graft.relational.Apriori.profile(items)
     require(maxB > graft.relational.Apriori.LongBasketAt,
       s"long-basket corpus must exceed the switch bound, got max $maxB")
     val denom = sys.env.getOrElse("SPARK_GRAFT_APRIORI_DENOM",
@@ -82,17 +79,19 @@ object AprioriRouteBench {
       .candidates(graft.relational.Apriori.frequentPairs(items, thr))
       .count()
 
-    def time(route: String): (Double, Long) = {
+    // the max basket length passed to triples picks the plan: 0 forces
+    // generate, the measured max (past the bound) forces candidate
+    def time(plan: String, maxBasket: Long): (Double, Long) = {
       var rows = -1L
       val Bench.Timing(sec, _, failed, _) = Bench.minTimeCounting(reps, () => {
         rows = graft.relational.Apriori
-          .triples(items, thr, forceRoute = Some(route)).count()
+          .triples(items, thr, maxBasket).count()
       }, e => e.printStackTrace())
-      require(!failed, s"route $route failed")
+      require(!failed, s"route $plan failed")
       (sec, rows)
     }
-    val (genSec, genRows) = time("generate")
-    val (candSec, candRows) = time("candidate")
+    val (genSec, genRows) = time("generate", 0L)
+    val (candSec, candRows) = time("candidate", maxB)
     require(genRows == candRows,
       s"route mismatch: generate=$genRows candidate=$candRows")
 

@@ -30,24 +30,12 @@ object Caches {
       override def initialValue() = new java.util.ArrayDeque[Dataset[_]]()
     }
 
-  private val trackedRdds =
-    new ThreadLocal[java.util.ArrayDeque[org.apache.spark.rdd.RDD[_]]] {
-      override def initialValue() =
-        new java.util.ArrayDeque[org.apache.spark.rdd.RDD[_]]()
-    }
-
   /** `ds.persist()` + track the handle for a later [[release]]. */
   def persist[T](ds: Dataset[T]): Dataset[T] = {
     ds.persist()
     tracked.get().add(ds)
     ds
   }
-
-  /** Track an already-persisted RDD whose blocks back a returned plan
-    * (`GraftSqlBridge.materialized` output that outlives its query
-    * function — e.g. q55's final label round). */
-  def track(rdd: org.apache.spark.rdd.RDD[_]): Unit =
-    trackedRdds.get().add(rdd)
 
   /** Unpersist every cache tracked by the calling thread (idempotent;
     * safe if some were already unpersisted or their session is
@@ -62,25 +50,15 @@ object Caches {
     * lands inside the NEXT query's timed section (the sf1 rehearsal's
     * neighbor-contamination mechanism, SCALE.md). */
   def release(blocking: Boolean = false): Unit = {
-    def free(unpersist: () => Unit): Unit =
-      try unpersist()
+    val q = tracked.get()
+    var ds = q.poll()
+    while (ds != null) {
+      try ds.unpersist(blocking)
       catch {
         case _: InterruptedException => Thread.currentThread().interrupt()
         case scala.util.control.NonFatal(_) => ()
       }
-    val q = tracked.get()
-    var ds = q.poll()
-    while (ds != null) {
-      val d = ds
-      free(() => d.unpersist(blocking))
       ds = q.poll()
-    }
-    val qr = trackedRdds.get()
-    var rdd = qr.poll()
-    while (rdd != null) {
-      val r = rdd
-      free(() => r.unpersist(blocking))
-      rdd = qr.poll()
     }
   }
 }

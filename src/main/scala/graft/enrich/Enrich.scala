@@ -26,11 +26,12 @@ object Enrich {
 
   /** Envelope → enriched telemetry (pre-anomaly columns of the ASA CTE).
     * `enqueuedTime` string (ns precision) → µs TimestampType is the
-    * documented E2 truncation. */
+    * documented E2 truncation; an unparseable time reads as null, as
+    * in `CuratedPipeline.toPipeEvents`. */
   def telemetry(env: DataFrame): DataFrame =
     env.select(
       col("deviceId"),
-      to_timestamp(col("enqueuedTime")).as("enqueuedTime"),
+      try_to_timestamp(col("enqueuedTime")).as("enqueuedTime"),
       col("telemetry.battery").as("battery"),
       col("telemetry.barometer").as("barometer"),
       col("telemetry.geolocation.lat").as("latitude"),

@@ -96,29 +96,16 @@ object QuantileSketch {
 
   /** Discrete quantile estimates: for each q, the smallest element
     * whose cumulative weight reaches ⌈q·n⌉ (rank-lower rule —
-    * DuckDB's `quantile_disc` exactly, in the exact regime). */
+    * DuckDB's `quantile_disc` exactly, in the exact regime); NaN for
+    * an empty sketch or a rank past n. */
   def quantiles(s: QState, qs: Seq[Double]): Seq[Double] = {
-    val n = count(s)
-    if (n == 0L) return qs.map(_ => Double.NaN)
-    selectRanks(s, qs.map(q => math.max(1L, math.ceil(q * n).toLong)))
-  }
-
-  /** Selection at ABSOLUTE 1-based ranks (the order-statistic surface
-    * next to [[quantiles]]' fractional one — q200's conformal
-    * thresholds are rank-k statistics with k derived from each group's
-    * own n, which no fixed quantile list can express). For each
-    * target, the smallest element whose cumulative weight reaches it;
-    * a rank outside [1, n] yields NaN (callers filter or guard —
-    * conformal's k > n degenerate means "threshold = ∞", a dropped
-    * row). Exact while n ≤ capacity, the compactor rank bound past
-    * it — same regimes as [[quantiles]]. */
-  def selectRanks(s: QState, targets: Seq[Long]): Seq[Double] = {
     val items = s.levels.zipWithIndex
       .flatMap { case (l, i) => l.map(x => (x, 1L << i)) }
       .sortBy(_._1)
     val n = items.map(_._2).sum
-    targets.map { target =>
-      if (target < 1L || target > n) Double.NaN
+    qs.map { q =>
+      val target = math.max(1L, math.ceil(q * n).toLong)
+      if (n == 0L || target > n) Double.NaN
       else {
         var cum = 0L
         var ans = items.last._1
@@ -147,33 +134,6 @@ final class QuantileSketchAgg(capacity: Int, qs: Seq[Double])
   override def merge(x: QState, y: QState): QState =
     mergeStates(x, y, capacity)
   override def finish(b: QState): Seq[Double] = quantiles(b, qs)
-
-  private val stEnc: Encoder[QState] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[QState]()
-  private val outEnc: Encoder[Seq[Double]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Double]]()
-  override def bufferEncoder: Encoder[QState] = stEnc
-  override def outputEncoder: Encoder[Seq[Double]] = outEnc
-}
-
-/** Selection at group-size-derived ranks: `finish` reads n off the
-  * sketch itself and returns the elements at `ranksOf(n)` (1-based,
-  * rank-lower rule; out-of-range ranks yield NaN). This is the
-  * aggregator q200's sketch route needs — the conformal median sits at
-  * rank (n+1) div 2 and the threshold at ⌈(n+1)·0.9⌉, ranks no fixed
-  * quantile-fraction list can express when every group has its own n.
-  * Exact while each group's n ≤ capacity (q86's exactness regime). */
-final class RankSelectAgg(capacity: Int, ranksOf: Long => Seq[Long])
-    extends Aggregator[Double, QuantileSketch.QState, Seq[Double]] {
-  require(capacity >= 4, "capacity must be at least 4")
-  import QuantileSketch._
-
-  override def zero: QState = empty
-  override def reduce(b: QState, x: Double): QState = insert(b, x, capacity)
-  override def merge(x: QState, y: QState): QState =
-    mergeStates(x, y, capacity)
-  override def finish(b: QState): Seq[Double] =
-    selectRanks(b, ranksOf(count(b)))
 
   private val stEnc: Encoder[QState] =
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[QState]()

@@ -1,7 +1,6 @@
 package graft.llmdata
 
 import graft.{Caches, Q, Tables}
-import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -121,8 +120,8 @@ object Dedup {
   private[llmdata] val VocabBitmapBudget: Long = 1L << 16
 
   /** The dictionary-bitmap vocabulary of `tokens` (a `w` column), shared
-    * by [[setSim]] and [[IncrementalLsh]]'s verify. A bounded probe (the
-    * q55 limit-collect pattern) brings at most `min(budget,
+    * by [[setSim]] and [[IncrementalLsh]]'s verify. A bounded probe (a
+    * `limit(budget + 1)` collect) brings at most `min(budget,
     * VocabBitmapBudget) + 1` distinct words to the driver: the measured
     * scalar that picks the verify regime, and when the vocabulary fits,
     * the dictionary itself — sorted ids in a LocalRelation, so the
@@ -671,189 +670,62 @@ object Dedup {
       .orderBy("a_id", "b_id")
   }
 
-  /** Edge budget for q55's driver-side union-find route: the component
-    * graph's nodes are DISTINCT fingerprint values (simhashValues
-    * scaladoc — bounded by the fingerprint domain, 2^16 here), so its
-    * near-dup edge list is bounded too (≤ |values|·137/2 for Hamming
-    * ≤ 2 over 16 bits ≈ 4.5 M), independent of corpus size. Under this
-    * budget the edges collect to the driver (two longs each — ≤ 32 MB)
-    * and union-find labels the components in one pass; over it, the
-    * distributed min-label/pointer-jump loop runs instead. Same
-    * measure-then-plan pattern as [[VocabBitmapBudget]]: the probe is a
-    * `limit(budget+1).collect()`, so a pathological graph costs one
-    * bounded fetch, never an unbounded driver materialization. */
-  private[llmdata] val DriverCcEdgeBudget: Int = 1 << 21
-
-  /** q55 body, parameterized so the spec can force the distributed
-    * route (`ccEdgeBudget = 0`) and pin route equality.
-    *
-    * Connected components over the near-dup VALUE graph; cluster id =
-    * min doc_id of the component; docs attach to their value's
-    * component at the end (Hamming-0 dups collapse there without ever
-    * being graph nodes). Two routes, identical labels:
-    *
-    *  - DRIVER UNION-FIND (edge list under [[DriverCcEdgeBudget]] —
-    *    always, for a 16-bit fingerprint): collect the value-pair
-    *    edges, path-halving union-find with min-root union (the root
-    *    stays the component's minimum value, so labels come out
-    *    exactly as the distributed route's converged min-labels), one
-    *    createDataFrame back. Rounds of shuffle latency collapse into
-    *    milliseconds of driver CPU — the same justified driver-side
-    *    bound as IVF's sampled k-means centroids.
-    *
-    *  - DISTRIBUTED MIN-LABEL + POINTER JUMP (over budget — 64-bit
-    *    production fingerprints whose value graph outgrows the
-    *    driver): Pregel-style, one requests⋈labels join + min-per-dst
-    *    aggregate per round (2 shuffles), pointer jumping for
-    *    O(log diameter) rounds, each round materialized into persisted
-    *    RDD blocks ([[GraftSqlBridge.materialized]] — a naive plan
-    *    loop would grow exponentially in analysis) and its
-    *    predecessor's blocks freed as soon as the next is counted.
-    *    Bounded rounds with a loud refusal — a silent cap would split
-    *    a real component. At larger diameters the public scale route
-    *    is alternating large-star/small-star (Kiveris et al.,
-    *    "Connected Components in MapReduce"); the per-round join shape
-    *    is the same. */
-  private[llmdata] def dupClusters(s: SparkSession, d: String,
-      ccEdgeBudget: Int = DriverCcEdgeBudget): DataFrame = {
-    val (sh, vp) = simhashValues(s, d)
-    val probe =
-      if (ccEdgeBudget > 0)
-        vp.select(col("va"), col("vb")).limit(ccEdgeBudget + 1).collect()
-      else Array.empty[org.apache.spark.sql.Row]
-    if (ccEdgeBudget > 0 && probe.length <= ccEdgeBudget) {
-      // union-find, path halving; union-by-min keeps root = min(component)
-      val parent = new java.util.HashMap[Long, Long]()
-      def find(x0: Long): Long = {
-        var x = x0
-        var p = parent.getOrDefault(x, x)
-        while (p != x) {
-          val gp = parent.getOrDefault(p, p)
-          parent.put(x, gp)
-          x = gp
-          p = parent.getOrDefault(x, x)
-        }
-        x
+  /** Union-find over packed value-pair edges (`va << 16 | vb`, both
+    * 16-bit fingerprint values), with path halving and min-root union:
+    * returns every value's root, which is the minimum value of its
+    * component (a value in no edge is its own root). The value graph
+    * is bounded by the fingerprint domain, so this is all driver work:
+    * 2^16 nodes and at most 2^16·(16 + 120)/2 = 4,456,448 Hamming-≤2
+    * edges (~36 MB packed). */
+  private[llmdata] def componentRoots(edges: Array[Long]): Array[Int] = {
+    val parent = Array.tabulate(1 << 16)(identity)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) {
+        parent(x) = parent(parent(x))
+        x = parent(x)
       }
-      probe.foreach { r =>
-        val (ra, rb) = (find(r.getLong(0)), find(r.getLong(1)))
-        if (ra < rb) parent.put(rb, ra)
-        else if (rb < ra) parent.put(ra, rb)
-      }
-      // value → cluster computed ON THE DRIVER too (round 15): the
-      // old tail attached labels through four value-count exchanges
-      // (vmin, the label join, the component min, the re-attach), but
-      // the per-value min doc is itself bounded by the fingerprint
-      // domain (≤ 2^16 rows of two longs — the same bound that
-      // admitted the edge collect), so one bounded collect + the
-      // union-find map yields the (simhash → cluster_id) table and
-      // the only distributed step left is a broadcast join onto the
-      // cached per-doc fingerprints. find(v) = v for values that
-      // never appeared in an edge — the isolated-value identity the
-      // old coalesce provided.
-      val vmin = sh.groupBy("simhash").agg(min("doc_id").as("vmin"))
-        .collect()
-      val cmin = new java.util.HashMap[Long, Long]()
-      vmin.foreach { r =>
-        val c = find(r.getLong(0))
-        val m = r.getLong(1)
-        if (m < cmin.getOrDefault(c, Long.MaxValue)) cmin.put(c, m)
-      }
-      import s.implicits._
-      val vmap = vmin.toSeq
-        .map(r => (r.getLong(0), cmin.get(find(r.getLong(0)))))
-        .toDF("simhash", "cluster_id")
-      sh.join(broadcast(vmap), "simhash")
-        .select(col("doc_id"), col("cluster_id"),
-          (col("doc_id") === col("cluster_id")).cast("int").as("keep"))
-        .orderBy("doc_id")
-    } else {
-      val labels = distributedMinLabel(s, vp)
-      // value → component (isolated values are their own component),
-      // component → min doc_id over its member values, doc → cluster
-      // via its own fingerprint.
-      val vmin = sh.groupBy("simhash").agg(min("doc_id").as("vmin"))
-      val vlab = vmin
-        .join(labels.toDF("simhash", "comp"), Seq("simhash"), "left")
-        .withColumn("comp", coalesce(col("comp"), col("simhash")))
-      val cmin = vlab.groupBy("comp").agg(min("vmin").as("cluster_id"))
-      sh.join(vlab.join(cmin, "comp").select("simhash", "cluster_id"),
-          "simhash")
-        .select(col("doc_id"), col("cluster_id"),
-          (col("doc_id") === col("cluster_id")).cast("int").as("keep"))
-        .orderBy("doc_id")
+      x
     }
+    edges.foreach { e =>
+      val (ra, rb) = (find((e >>> 16).toInt), find((e & 0xFFFF).toInt))
+      if (ra < rb) parent(rb) = ra
+      else if (rb < ra) parent(ra) = rb
+    }
+    parent.indices.foreach(v => parent(v) = find(v))
+    parent
   }
 
-  /** The distributed route of [[dupClusters]]: min-label propagation
-    * with pointer jumping over the value-pair graph `vp`. Returns the
-    * converged (doc_id = value, cluster_id = min value) labels, backed
-    * by persisted RDD blocks (tracked for the caller's release). */
-  private def distributedMinLabel(s: SparkSession, vp: DataFrame): DataFrame = {
-    val (edges, edgesRdd) = GraftSqlBridge.materialized(
-      vp.select(col("va").as("u"), col("vb").as("v"))
-        .unionByName(vp.select(col("vb").as("u"), col("va").as("v"))))
-    var (labels, labelsRdd) = GraftSqlBridge.materialized(
-      edges.select(col("u").as("doc_id")).distinct()
-        .select(col("doc_id"), col("doc_id").as("cluster_id")))
-    var changed = 1L
-    var rounds = 0
-    // any exit before the normal epilogue (a mid-round failure or the
-    // convergence refusal below) must free the blocks this loop
-    // persisted — they are invisible to Caches.release and clearCache,
-    // so a throw here would otherwise strand them on the executors for
-    // the session's lifetime
-    try {
-      while (changed > 0 && rounds < 50) {
-        // One round = ONE join + ONE aggregate. All three label lookups
-        // a round needs — each neighbor's label, the POINTER JUMP
-        // label(label(u)) (labels are themselves node ids — here
-        // simhash values), and u's own label — are rendered as request
-        // rows (key to look up, dst to deliver to), so a single
-        // requests⋈labels equi-join + min-per-dst replaces the previous
-        // three joins (neighbor-min, step, jump): 2 shuffles per round
-        // instead of 4, with map-side partial min on both. The identity
-        // request doubles as the `moved` detector: its looked-up label
-        // IS u's old label (key = dst), so convergence needs no extra
-        // join against the previous round.
-        val req = edges.select(col("v").as("key"), col("u").as("dst"))
-          .unionByName(labels
-            .select(col("cluster_id").as("key"), col("doc_id").as("dst")))
-          .unionByName(labels
-            .select(col("doc_id").as("key"), col("doc_id").as("dst")))
-        val (next, nextRdd) = GraftSqlBridge.materialized(req
-          .join(labels.withColumnRenamed("doc_id", "key"), "key")
-          .groupBy("dst")
-          .agg(min("cluster_id").as("new_cluster"),
-            min(when(col("key") === col("dst"), col("cluster_id")))
-              .as("old_cluster"))
-          .select(col("dst").as("doc_id"),
-            col("new_cluster").as("cluster_id"),
-            (col("new_cluster") < col("old_cluster")).as("moved")))
-        // the count materializes next's blocks; only then is the
-        // previous round safe to free (recompute would chain through it)
-        changed = next.filter(col("moved")).count()
-        labelsRdd.unpersist(blocking = false)
-        labels = next.drop("moved")
-        labelsRdd = nextRdd
-        rounds += 1
-      }
-      // a silent cap would return wrong cluster ids (an over-cap
-      // diameter would split one real component); refuse instead
-      if (changed > 0) throw new IllegalStateException(
-        s"q55: label propagation not converged after $rounds rounds " +
-          s"($changed labels still changing) — component depth exceeds " +
-          "the cap; raise it or switch to large-star/small-star")
-    } catch { case t: Throwable =>
-      labelsRdd.unpersist(blocking = false)
-      edgesRdd.unpersist(blocking = false)
-      throw t
+  /** q55 body: connected components over the near-dup VALUE graph;
+    * cluster id = min doc_id of the component; docs attach to their
+    * value's component at the end (Hamming-0 dups collapse there
+    * without ever being graph nodes). The value-pair edges collect in
+    * one job and [[componentRoots]] labels them on the driver; the
+    * per-value min doc is bounded by the same domain (≤ 2^16 rows), so
+    * one more collect yields the (simhash → cluster_id) table and the
+    * only distributed step left is a broadcast join onto the cached
+    * per-doc fingerprints. Rounds of shuffle latency collapse into
+    * milliseconds of driver CPU — the same justified driver-side
+    * bound as IVF's sampled k-means centroids. */
+  private[llmdata] def dupClusters(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    val (sh, vp) = simhashValues(s, d)
+    val root = componentRoots(
+      vp.select(shiftleft(col("va"), 16).bitwiseOR(col("vb"))).as[Long]
+        .collect())
+    val vmin = sh.groupBy("simhash").agg(min("doc_id").as("vmin")).collect()
+    val cmin = Array.fill(1 << 16)(Long.MaxValue)
+    vmin.foreach { r =>
+      val c = root(r.getLong(0).toInt)
+      cmin(c) = math.min(cmin(c), r.getLong(1))
     }
-    edgesRdd.unpersist(blocking = false)
-    // the final round's blocks back the RETURNED plan — released by
-    // the caller (harness: per query) after its last action
-    Caches.track(labelsRdd)
-    labels
+    val vmap = vmin.toSeq
+      .map(r => (r.getLong(0), cmin(root(r.getLong(0).toInt))))
+      .toDF("simhash", "cluster_id")
+    sh.join(broadcast(vmap), "simhash")
+      .select(col("doc_id"), col("cluster_id"),
+        (col("doc_id") === col("cluster_id")).cast("int").as("keep"))
+      .orderBy("doc_id")
   }
 
   val qs: Seq[Q] = Seq(
@@ -1125,15 +997,11 @@ object Dedup {
     //      the q53 near-dup pair graph, cluster id = min doc_id in the
     //      component, `keep` marks the one survivor per cluster (the
     //      "collapse near-dup groups" step after any pairwise dedup).
-    //      Pregel-style min-label propagation: each round is one
-    //      edges⋈labels shuffle + a min-aggregate, materialized and
-    //      convergence-checked (a bounded scalar per round); rounds =
-    //      graph diameter, which is tiny for near-dup clusters. At
-    //      larger diameters the public scale route is alternating
-    //      large-star/small-star (Kiveris et al., "Connected Components
-    //      in MapReduce"); the per-round join shape below is the same.
-    //      Exact integer min ⇒ deterministic, oracle = recursive-CTE
-    //      transitive closure. ----
+    //      The graph's nodes are distinct 16-bit fingerprint values, so
+    //      it is bounded by the domain (≤ 4.5M edges) at any corpus
+    //      size: one edge collect and a driver union-find label it
+    //      ([[dupClusters]]). Exact integer min ⇒ deterministic,
+    //      oracle = recursive-CTE transitive closure. ----
     Q(
       "q55_dup_clusters",
       s"""WITH RECURSIVE $SimhashCte,

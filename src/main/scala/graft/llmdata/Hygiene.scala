@@ -613,10 +613,9 @@ object Hygiene {
     //      exact side counts (overflow-free via integer division) and
     //      fails loudly past it. A KS test is statistically saturated
     //      long before either bound, so the 100 TB route is a bounded
-    //      per-split sample feeding this same plan — ROUTE-SWITCHED
-    //      since round 10 (see [[KsDrift]]): auto takes the exact
-    //      route inside the regime and the deterministic stride sample
-    //      past it, the q171/Rfm discipline. Argmax
+    //      per-split sample feeding this same plan — SWITCHED since
+    //      round 10 (see [[KsDrift]]): the exact fold inside the
+    //      regime, the deterministic stride sample past it. Argmax
     //      tie-break: smallest length achieving the max. ----
     Q(
       "q198_ks_split_drift",
@@ -717,8 +716,7 @@ object Hygiene {
   * the q198 envelope": past the cross-multiplied micro regime
   * (n_tr·n_te > 2⁶³/10⁶, ~3·10⁶ docs per side) the query now SWITCHES
   * to the documented bounded per-split sample instead of stopping at
-  * the loud guard (which stays, for the exact route's own protection —
-  * the q171/[[graft.relational.Rfm]] discipline).
+  * the loud guard (which stays, for the exact route's own protection).
   *
   * Two routes through ONE fold ([[ksFold]] — grouped length-domain
   * counts → cumulative window on the collapsed domain → integer
@@ -743,7 +741,7 @@ object Hygiene {
   * pinned row-identical; the sub-budget sample is pinned deterministic
   * and direction-correct on a synthetic shifted split.
   *
-  * Switch: "auto" counts the two sides (one aggregate over the
+  * Switch: [[drift]] counts the two sides (one aggregate over the
   * persisted split rows — a 1-row driver scalar) and takes the exact
   * route while n_tr·n_te fits the micro regime (overflow-free integer
   * test), the sample route past it. */
@@ -753,7 +751,7 @@ object KsDrift {
   /** Per-split row budget of the sample route. */
   val SampleBudget: Long = 1L << 20
 
-  /** The cross-multiplied micro regime both the guard and the auto
+  /** The cross-multiplied micro regime both the guard and the
     * switch test: n_tr·n_te ≤ 2⁶³/10⁶. */
   val MicroBound: Long = Long.MaxValue / 1000000L
 
@@ -791,9 +789,9 @@ object KsDrift {
         graft.ScaleGuards.guarded(
           graft.ScaleGuards.productWithin("n_tr", "n_te", MicroBound),
           "q198: n_tr*n_te exceeds the cross-multiplied micro " +
-            "regime - d_num*10^6 would overflow 2^63; the sample " +
-            "route (KsDrift.drift route=auto switches for you) feeds " +
-            "a bounded per-split sample through this same plan",
+            "regime - d_num*10^6 would overflow 2^63; KsDrift.drift " +
+            "switches to a bounded per-split sample through this " +
+            "same plan",
           expr("d_num * 1000000 div nullif(n_tr * n_te, 0)")
             .cast("long")).as("ks_micro"),
         col("d_num"), col("at_value"),
@@ -818,24 +816,19 @@ object KsDrift {
         (!col("is_tr") && pmod(col("doc_id"), lit(sTe)) === 0))
   }
 
-  /** q198's entry point: route ∈ auto | exact | sample. */
-  def drift(docs: DataFrame, route: String = "auto"): DataFrame = {
+  /** q198's entry point: the exact fold while n_tr·n_te fits
+    * [[MicroBound]], the stride sample through the same fold past
+    * it. */
+  def drift(docs: DataFrame): DataFrame = {
     val rows = graft.Caches.persist(splitRows(docs))
-    val chosen = route match {
-      case "exact" | "sample" => route
-      case "auto" =>
-        val r = rows.agg(
-          coalesce(sum(when(col("is_tr"), 1L)), lit(0L)).as("n_tr"),
-          coalesce(sum(when(!col("is_tr"), 1L)), lit(0L)).as("n_te"))
-          .head()
-        val (nTr, nTe) = (r.getLong(0), r.getLong(1))
-        // overflow-free a·b ≤ bound (the ScaleGuards.productWithin
-        // identity, driver-side)
-        val within = nTr == 0L || nTe == 0L || nTe <= MicroBound / nTr
-        if (within) "exact" else "sample"
-      case other =>
-        throw new IllegalArgumentException(s"unknown KS route: $other")
-    }
-    if (chosen == "exact") ksFold(rows) else ksFold(sampled(rows))
+    val r = rows.agg(
+      coalesce(sum(when(col("is_tr"), 1L)), lit(0L)).as("n_tr"),
+      coalesce(sum(when(!col("is_tr"), 1L)), lit(0L)).as("n_te"))
+      .head()
+    val (nTr, nTe) = (r.getLong(0), r.getLong(1))
+    // overflow-free a·b ≤ bound (the ScaleGuards.productWithin
+    // identity, driver-side)
+    val within = nTr == 0L || nTe == 0L || nTe <= MicroBound / nTr
+    ksFold(if (within) rows else sampled(rows))
   }
 }

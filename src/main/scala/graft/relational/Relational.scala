@@ -712,15 +712,8 @@ object Relational {
       // (round 14: folding the profile into the count the floor
       // already paid keeps the switch free — a separate max aggregate
       // measured +0.3 s at sf0.1)
-      val prof = items.groupBy("bid").agg(count(lit(1)).as("b"))
-        .agg(count(lit(1)).as("baskets"), max("b").as("max_b")).head()
-      val thr = math.max(1L, prof.getLong(0) / 300)
-      // max over zero baskets is NULL (empty/partial source dir):
-      // route over 0 → generate, which returns empty — the old
-      // empty-safe behavior (round-14 review finding)
-      val maxB = if (prof.isNullAt(1)) 0L else prof.getLong(1)
-      Apriori.triples(items, thr,
-        forceRoute = Some(Apriori.route(maxB)))
+      val (baskets, maxB) = Apriori.profile(items)
+      Apriori.triples(items, math.max(1L, baskets / 300), maxB)
         .orderBy(col("sup").desc, col("i1"), col("i2"), col("i3"))
         .limit(20)
     },
@@ -813,13 +806,8 @@ object Relational {
     //      (value, customer) tie-breaks (ntile is order-exact in both
     //      engines given a total order), and the output is the
     //      125-cell segment census — cardinality bounded by 5³, not
-    //      customers. Routing lives in [[Rfm]]: below
-    //      Rfm.WindowEntityBudget entities the ntile windows run
-    //      as-is (global, but on the CUSTOMER-grain frame); above it
-    //      the sketch route takes over — boundaries from the q86
-    //      compactor sketch probed at the exact ntile split ranks,
-    //      codes assigned map-side against the 4 broadcast
-    //      boundaries; RfmRouteSpec pins route equality. ----
+    //      customers. The windows are global but run on the
+    //      CUSTOMER-grain frame ([[Rfm]]). ----
     Q(
       "q171_rfm_scores",
       """WITH rfm AS (SELECT o_custkey AS cust,
@@ -845,91 +833,15 @@ object Relational {
   )
 }
 
-/** RFM quintile assignment with a scale-aware route switch — the
-  * round-7 verdict item "make q171's documented scale route real".
-  *
-  * Two routes producing IDENTICAL codes (spec-pinned, RfmRouteSpec):
-  *
-  *  - '''window''': three `ntile(5)` windows over the entity-grain
-  *    frame with (value, cust) tie-breaks — exact, but each window is
-  *    a single-partition global sort (WindowExec with no PARTITION
-  *    BY), so it is bounded by one task sorting every entity.
-  *  - '''sketch''': quintile boundaries from ONE
-  *    [[graft.functions.QuantileSketchAgg]] pass per dimension probed
-  *    at the exact ntile split RANKS (B_t = t·⌊n/5⌋ + min(t, n mod 5),
-  *    probed at (B_t − 0.5)/n so ⌈q·n⌉ lands on B_t), then codes
-  *    assigned MAP-SIDE by comparison against the 4 broadcast
-  *    boundaries (q98's discipline) — scales with executors, never
-  *    sorts the entity frame globally.
-  *
-  * Tie-correctness of the sketch route (where plain value-boundaries
-  * and ntile diverge): recency and frequency — the dimensions where
-  * ties are endemic (small integer domains) — are sketched as the
-  * COMPOSITE (value, cust) encoding `vkey·2^31 + cust`, which is
-  * exactly representable in the sketch's doubles while vkey < 2^21
-  * and cust < 2^31 (enc < 2^52 < 2^53; guarded in-plan with a loud
-  * `assert_true`). The boundary element then IS the ntile split row,
-  * so comparison against it reproduces the (value, cust) tie-break
-  * bit-for-bit. Monetary (exact-decimal order sums — ties essentially
-  * impossible) is sketched as the raw double with an in-plan guard
-  * that each boundary value is hit by exactly ONE entity (4 distinct
-  * boundaries, 4 total tie hits): a pathological corpus whose
-  * monetary tie group straddles a boundary refuses loudly instead of
-  * mis-coding — the q116/q145 regime-gate discipline.
-  *
-  * Exactness regime: while entities ≤ sketch capacity the sketch is
-  * the exact multiset, so boundaries are exact order statistics and
-  * the routes are value-identical (spec-pinned). Past capacity the
-  * boundaries carry the compactor rank bound (≤ levels·n/c) —
-  * segmentation-grade, and the honest price of the scale route.
-  *
-  * Switch ([[Rfm.WindowEntityBudget]], the `VocabBitmapBudget`
-  * discipline): "auto" counts the persisted entity frame (one cached
-  * count, the only driver-side scalar) and takes the window route
-  * below the budget — measured on this box, the single-task sort is
-  * cheaper than the sketch's two extra passes up to millions of
-  * entities (~130 ms vs ~800 ms at 15k; both sub-second through
-  * sf1's 150k) — and the sketch route above it, where a single sort
-  * task would page out: 4M entities ≈ the last size whose (recency,
-  * frequency, monetary, cust) rows fit one task's sort buffer
-  * comfortably at ~32 B/row. */
+/** RFM quintile assignment (q171): one grouped pass builds the
+  * per-customer triple, three `ntile(5)` windows with (value, cust)
+  * tie-breaks code it, and the census folds the codes to 125 cells.
+  * Exact at any n. Each window is a single-partition global sort over
+  * the CUSTOMER-grain frame, not the orders, so it is bounded by one
+  * task sorting every customer (~32 B/row). */
 object Rfm {
-  import org.apache.spark.sql.{Column, DataFrame}
-
-  /** Entities at or below this take the ntile-window route; above it
-    * the sketch route (see decision log above). */
-  val WindowEntityBudget: Long = 4L * 1000 * 1000
-
-  /** cust slot width in the composite encoding; with vkey < 2^21 the
-    * encoding stays below 2^52, double-exact. */
-  val CompositeShift: Long = 1L << 31
-
-  /** Sketch capacity is tied to the counted entity frame, not a fixed
-    * 2^16: with a fixed capacity the auto route would ALWAYS be lossy
-    * the moment it is chosen (it only fires above
-    * [[WindowEntityBudget]] = 4M > 2^16), silently diverging from the
-    * exact ntile semantics the window route (and q171's oracle) pins.
-    * Rule: smallest power of two ≥ n/[[SketchRankRatio]], clamped to
-    * [2^16, 2^20]. Compactor rank error is ≤ levels·(n/cap) with
-    * levels ≈ log2(n/cap)+1, so pinning n/cap ≤ 64 bounds the ABSOLUTE
-    * rank perturbation at ≤ 7·64 ≈ 450 rows regardless of n — a
-    * ≤ 450/n relative quintile-boundary error (≈ 10⁻⁴ at the 4M switch
-    * point, shrinking as n grows). Above the 2^20 memory ceiling
-    * (8 MB/sketch state, 3 sketches per agg task) the ratio grows
-    * again: error ≤ (log2(n/2^20)+1)·n/2^20 — still ~10⁻⁵ relative at
-    * 10⁹ entities. The oracle-gate exemption above the budget is by
-    * construction (the oracle frame never exceeds it); this bound is
-    * the documented price of the scale route. */
-  val SketchRankRatio: Long = 64L
-  private[relational] def autoCapacity(n: Long): Int = {
-    var c = 1 << 16
-    while (c < (1 << 20) && c.toLong * SketchRankRatio < n) c <<= 1
-    c
-  }
-
-  /** Per-customer (cust, recency, frequency, monetary) triple — the
-    * shared entity-grain input of both routes (q119 float policy:
-    * exact DECIMAL sum, one double conversion). */
+  /** Per-customer (cust, recency, frequency, monetary) triple (q119
+    * float policy: exact DECIMAL sum, one double conversion). */
   def triples(orders: DataFrame): DataFrame =
     orders.groupBy(col("o_custkey").as("cust"))
       .agg(datediff(lit(java.sql.Date.valueOf("1999-01-01")),
@@ -939,8 +851,7 @@ object Rfm {
       .withColumn("monetary", col("msum").cast("double"))
       .drop("msum")
 
-  /** Exact route: three global ntile(5) windows with (value, cust)
-    * tie-breaks. */
+  /** Three global ntile(5) windows with (value, cust) tie-breaks. */
   def codesWindow(rfm: DataFrame): DataFrame =
     rfm
       .withColumn("r", ntile(5).over(
@@ -950,66 +861,7 @@ object Rfm {
       .withColumn("m", ntile(5).over(
         Window.orderBy(col("monetary"), col("cust"))))
 
-  /** ntile(5) split ranks: the last rank of buckets 1..4. */
-  private def splitRanks(n: Long): Seq[Long] = {
-    val q = n / 5
-    val rem = n % 5
-    (1 to 4).map(t => t * q + math.min(t.toLong, rem))
-  }
-
-  private def encR: Column =
-    (-col("recency")).cast("double") * CompositeShift.toDouble +
-      col("cust").cast("double")
-  private def encF: Column =
-    col("frequency").cast("double") * CompositeShift.toDouble +
-      col("cust").cast("double")
-
-  /** Scale route: sketch-derived boundaries + broadcast comparison.
-    * `capacity ≤ 0` (the default) scales with the counted frame via
-    * [[autoCapacity]]; an explicit positive value pins it (specs). */
-  def codesSketch(rfm: DataFrame, capacity: Int = 0): DataFrame = {
-    val rfmP = graft.Caches.persist(rfm)
-    val n = rfmP.count()
-    if (n < 5) return codesWindow(rfmP) // fewer rows than buckets
-    val cap = if (capacity > 0) capacity else autoCapacity(n)
-    val probes = splitRanks(n).map(b => (b - 0.5) / n)
-    val sk = udaf(
-      new graft.functions.QuantileSketchAgg(cap, probes),
-      org.apache.spark.sql.Encoders.scalaDouble)
-    val bounds = rfmP.agg(
-      sk(encR).as("rB"), sk(encF).as("fB"),
-      sk(col("monetary")).as("mB"))
-    // monetary tie guard: 4 distinct boundary values, each hit once
-    val ties = rfmP.crossJoin(broadcast(bounds.select(col("mB"))))
-      .agg(sum(when(array_contains(col("mB"), col("monetary")), 1L)
-        .otherwise(0L)).as("n_tie_hits"))
-    val guarded = bounds.crossJoin(broadcast(ties)).select(
-      col("rB"), col("fB"), col("mB"),
-      (size(array_distinct(col("mB"))) === 4 &&
-        col("n_tie_hits") === 4L).as("m_ok"))
-    // negative vkeys are fine (recency can precede the anchor date):
-    // the encoding is monotone and exact while |vkey| < 2^21
-    val rangeOk = abs(col("recency")) < (1L << 21) &&
-      abs(col("frequency")) < (1L << 21) &&
-      col("cust") >= 0 && col("cust") < CompositeShift
-    def code(enc: Column, bs: Column): Column =
-      lit(1) + size(filter(bs, b => enc > b))
-    rfmP.crossJoin(broadcast(guarded))
-      .select(col("cust"), col("recency"), col("frequency"),
-        col("monetary"),
-        when(assert_true(rangeOk, lit("q171 sketch route: composite " +
-          "(value, cust) encoding out of the double-exact range - " +
-          "widen CompositeShift or take the window route")).isNull,
-          code(encR, col("rB"))).as("r"),
-        code(encF, col("fB")).as("f"),
-        when(assert_true(col("m_ok"), lit("q171 sketch route: a " +
-          "monetary tie group straddles a quintile boundary - the " +
-          "value-comparison assignment cannot reproduce the (value, " +
-          "cust) tie-break; take the window route")).isNull,
-          code(col("monetary"), col("mB"))).as("m"))
-  }
-
-  /** The 125-cell segment census over either route's codes. */
+  /** The 125-cell segment census over the codes. */
   def census(codes: DataFrame): DataFrame =
     codes.groupBy(col("r").cast("long").as("r"),
         col("f").cast("long").as("f"), col("m").cast("long").as("m"))
@@ -1017,19 +869,9 @@ object Rfm {
         min("cust").as("sample_cust"))
       .orderBy("r", "f", "m")
 
-  /** q171's entry point: route ∈ auto | window | sketch. */
-  def segments(orders: DataFrame, route: String = "auto"): DataFrame = {
-    val rfmP = graft.Caches.persist(triples(orders))
-    val chosen = route match {
-      case "window" | "sketch" => route
-      case "auto" =>
-        if (rfmP.count() <= WindowEntityBudget) "window" else "sketch"
-      case other =>
-        throw new IllegalArgumentException(s"unknown RFM route: $other")
-    }
-    census(if (chosen == "window") codesWindow(rfmP)
-           else codesSketch(rfmP))
-  }
+  /** q171's entry point. */
+  def segments(orders: DataFrame): DataFrame =
+    census(codesWindow(triples(orders)))
 }
 
 /** q166's A-priori triple stage with the basket-length ROUTE SWITCH
@@ -1054,10 +896,10 @@ object Rfm {
   * data-dependent (candidate-set density moves it); the bound only
   * needs to sit LEFT of the explosion, and both routes return
   * identical counts (AprioriRouteSpec), so a conservative switch
-  * costs a constant factor, never correctness. The profile read is
-  * one max aggregate on the already-persisted basket table — q87's
-  * basket-length profile reduced to the one statistic the route
-  * needs. */
+  * costs a constant factor, never correctness. The max basket length
+  * rides q166's own profile pass over the persisted basket table —
+  * q87's basket-length profile reduced to the one statistic the
+  * switch needs. */
 object Apriori {
   /** Max basket length at which support counting switches from
     * per-basket C(b,3) generation to the candidate⋈items join. */
@@ -1080,8 +922,15 @@ object Apriori {
     * smaller than the counting pass it gates) and picks per run. */
   val CandBroadcastAt = 2000000L
 
-  def route(maxBasket: Long, longBasketAt: Int = LongBasketAt): String =
-    if (maxBasket > longBasketAt) "candidate" else "generate"
+  /** One profile pass over the basket table: (basket count, max basket
+    * length). Max over zero baskets is NULL (an empty or partial source
+    * dir) and reads as 0, which takes the generate plan and returns
+    * empty (round-14 review finding). */
+  def profile(items: DataFrame): (Long, Long) = {
+    val r = items.groupBy("bid").agg(count(lit(1)).as("b"))
+      .agg(count(lit(1)), max("b")).head()
+    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+  }
 
   /** Frequent-pair-closed candidate triples: (i1,i2) ⋈ (i1,i3) with
     * i2 < i3, closed by requiring (i2,i3) frequent — the downward-
@@ -1095,55 +944,41 @@ object Apriori {
         Seq("i2", "i3"), "left_semi")
 
   /** Support counts of the candidate triples over (bid, item) baskets
-    * — route ∈ generate | candidate, both returning identical
-    * (i1, i2, i3, sup) rows (spec-pinned). `broadcastCand` gates the
-    * candidate side's broadcast hint ([[CandBroadcastAt]] — callers
-    * pass the MEASURED candidate count's verdict; the shuffle arm is
-    * plan-different but count-identical, spec-pinned alongside the
-    * routes). */
+    * — the `candidate` plan when `longBaskets`, else `generate`; both
+    * return identical (i1, i2, i3, sup) rows (spec-pinned).
+    * `broadcastCand` gates the candidate side's broadcast hint
+    * ([[CandBroadcastAt]] — callers pass the MEASURED candidate
+    * count's verdict; the shuffle arm is plan-different but
+    * count-identical, spec-pinned alongside the two plans). */
   def countTriples(items: DataFrame, cand: DataFrame,
-      route: String, broadcastCand: Boolean = true): DataFrame = {
+      longBaskets: Boolean, broadcastCand: Boolean = true): DataFrame = {
     val candSide = if (broadcastCand) broadcast(cand) else cand
-    route match {
-      case "generate" =>
-        items.groupBy("bid")
-          .agg(sort_array(collect_set(col("item"))).as("arr"))
-          .filter(size(col("arr")) >= 3)
-          .select(explode(expr(
-            "flatten(flatten(transform(sequence(0, size(arr) - 3), " +
-              "i -> transform(sequence(i + 1, size(arr) - 2), " +
-              "j -> transform(sequence(j + 1, size(arr) - 1), " +
-              "k -> struct(arr[i] AS i1, arr[j] AS i2, arr[k] AS i3))))))"))
-            .as("t"))
-          .select(col("t.i1").as("i1"), col("t.i2").as("i2"),
-            col("t.i3").as("i3"))
-          .join(candSide, Seq("i1", "i2", "i3"), "left_semi")
-          .groupBy("i1", "i2", "i3").agg(count(lit(1)).as("sup"))
-      case "candidate" =>
-        // fan baskets out over the candidates by first item, then
-        // close with two (bid, item) equi-joins — one row per
-        // (basket ⊇ candidate), counted per candidate; the shuffles
-        // are candidate-hit-sized, never C(b,3)-sized
-        items.toDF("bid", "i1")
-          .join(candSide, Seq("i1"))
-          .join(items.toDF("bid", "i2"), Seq("bid", "i2"), "left_semi")
-          .join(items.toDF("bid", "i3"), Seq("bid", "i3"), "left_semi")
-          .groupBy("i1", "i2", "i3").agg(count(lit(1)).as("sup"))
-      case other => throw new IllegalArgumentException(
-        s"unknown apriori route: $other")
-    }
+    if (!longBaskets)
+      items.groupBy("bid")
+        .agg(sort_array(collect_set(col("item"))).as("arr"))
+        .filter(size(col("arr")) >= 3)
+        .select(explode(expr(
+          "flatten(flatten(transform(sequence(0, size(arr) - 3), " +
+            "i -> transform(sequence(i + 1, size(arr) - 2), " +
+            "j -> transform(sequence(j + 1, size(arr) - 1), " +
+            "k -> struct(arr[i] AS i1, arr[j] AS i2, arr[k] AS i3))))))"))
+          .as("t"))
+        .select(col("t.i1").as("i1"), col("t.i2").as("i2"),
+          col("t.i3").as("i3"))
+        .join(candSide, Seq("i1", "i2", "i3"), "left_semi")
+        .groupBy("i1", "i2", "i3").agg(count(lit(1)).as("sup"))
+    else
+      // fan baskets out over the candidates by first item, then
+      // close with two (bid, item) equi-joins — one row per
+      // (basket ⊇ candidate), counted per candidate; the shuffles
+      // are candidate-hit-sized, never C(b,3)-sized
+      items.toDF("bid", "i1")
+        .join(candSide, Seq("i1"))
+        .join(items.toDF("bid", "i2"), Seq("bid", "i2"), "left_semi")
+        .join(items.toDF("bid", "i3"), Seq("bid", "i3"), "left_semi")
+        .groupBy("i1", "i2", "i3").agg(count(lit(1)).as("sup"))
   }
 
-  /** The full stage: frequent pairs at `thr` → closed candidates →
-    * route-switched support counting → threshold filter. `items` must
-    * be the DISTINCT (bid, item) basket table, persisted by the
-    * caller (the pair pass, the profile read, and the counting pass
-    * all reuse it). `forceRoute` pins the counting route: the specs
-    * use it for route-equality, and q166 passes [[route]] over the
-    * max basket length it measured in the SAME profile pass that
-    * derives the support floor — identical to the auto decision,
-    * without paying the profile twice. Absent, `triples` profiles
-    * the basket table itself. */
   /** Frequent (i1, i2) pairs at support `thr` — the candidate
     * generation's input and the first Apriori level. */
   def frequentPairs(items: DataFrame, thr: Long): DataFrame =
@@ -1153,8 +988,15 @@ object Apriori {
       .groupBy("i1", "i2").agg(count(lit(1)).as("sup"))
       .filter(col("sup") >= thr)
 
-  def triples(items: DataFrame, thr: Long,
-      forceRoute: Option[String] = None): DataFrame = {
+  /** The full stage: frequent pairs at `thr` → closed candidates →
+    * support counting → threshold filter. `items` must be the DISTINCT
+    * (bid, item) basket table, persisted by the caller (the pair pass,
+    * the profile read, and the counting pass all reuse it).
+    * `maxBasket` is the measured max basket length: past
+    * [[LongBasketAt]] the counting runs the candidate plan. q166
+    * measures it in the SAME profile pass that derives the support
+    * floor, so the decision costs no extra job. */
+  def triples(items: DataFrame, thr: Long, maxBasket: Long): DataFrame = {
     val pairs = graft.Caches.persist(frequentPairs(items, thr))
     // persist + count the candidate set: the count is the broadcast
     // guard's input ([[CandBroadcastAt]] scaladoc — candidate density
@@ -1164,12 +1006,8 @@ object Apriori {
     // joins. One extra job over a frequent-pair-bounded frame.
     val cand = graft.Caches.persist(candidates(pairs))
     val nCand = cand.count()
-    val chosen = forceRoute.getOrElse {
-      val r = items.groupBy("bid")
-        .agg(count(lit(1)).as("b")).agg(max("b")).head()
-      route(if (r.isNullAt(0)) 0L else r.getLong(0)) // null = no baskets
-    }
-    countTriples(items, cand, chosen, nCand <= CandBroadcastAt)
+    countTriples(items, cand, maxBasket > LongBasketAt,
+      nCand <= CandBroadcastAt)
       .filter(col("sup") >= thr)
   }
 }

@@ -1189,18 +1189,12 @@ object Stats {
     //      outputs are ORDER STATISTICS — selection plus one IEEE
     //      subtraction per score, no float summation anywhere; ranks
     //      use a deterministic (value, event_id) tie-break; k is pure
-    //      integer (⌈(n+1)·9/10⌉ = ((n+1)·9+9) div 10). Scale: ROUTE-
-    //      SWITCHED the q171/Rfm way (round-10 — the round-9 loud
-    //      guard turned into an answer, see [[Conformal]]): below 256M
-    //      rows/type the exact window route (two type-keyed window
-    //      ranks, single-task sort per type — the q200 guard stays
-    //      loud in-plan for an explicit window call); above it the
-    //      sketch route — per-type [[graft.functions.RankSelectAgg]]
-    //      order-statistic selection, exact in q86's regime, compactor
-    //      rank bound past it. Degenerate:
-    //      a type with k > n (n < 9) emits no row — conformal's
-    //      "threshold = ∞" — identically in both engines (rank join
-    //      finds no rn = k; the sketch route's NaN-rank filter). ----
+    //      integer (⌈(n+1)·9/10⌉ = ((n+1)·9+9) div 10). Scale: two
+    //      type-keyed window ranks, exact at any n, one sort task per
+    //      type; the k arithmetic's BIGINT envelope is guarded in-plan
+    //      ([[Conformal]]). Degenerate: a type with k > n (n < 9)
+    //      emits no row — conformal's "threshold = ∞" — identically in
+    //      both engines (the rank join finds no rn = k). ----
     Q(
       "q200_conformal_threshold",
       """WITH e AS (SELECT event_type AS t, event_id, value AS v
@@ -1394,79 +1388,31 @@ object Stats {
   )
 }
 
-/** Split-conformal calibration with a scale-aware route switch — the
-  * round-10 closure of the round-9 verdict item "implement, don't just
-  * guard, the q200 envelope": the 256M-rows/type window-sort budget
-  * now SWITCHES to a sketch route (the q171/[[Rfm]] discipline)
-  * instead of stopping at a loud error.
-  *
-  * Two routes producing IDENTICAL rows in the exact regime
-  * (spec-pinned, ConformalRouteSpec):
-  *
-  *  - '''window''' (exact at any n, single-task-sort-bounded per
-  *    type): two type-keyed `row_number` windows — rank (n+1) div 2 of
-  *    the values is the lower median, rank ⌈(n+1)·0.9⌉ of the
-  *    nonconformity scores is the threshold. Each type's partition
-  *    sorts in ONE task regardless of cluster size, so the route
-  *    carries the 256M-rows/type in-plan guard (q145 pattern — still
-  *    loud for an explicit window call past the budget).
-  *  - '''sketch''' (bounded state per type at any n): both statistics
-  *    are ORDER STATISTICS of per-type multisets — the output never
-  *    depends on the (value, event_id) tie-break, because the value at
-  *    a rank is a multiset property — so each is one
-  *    [[graft.functions.RankSelectAgg]] pass (q86's compactor sketch
-  *    selecting at the group's own rank: (n+1) div 2 for the median
-  *    over values, ⌈(n+1)·0.9⌉ for the threshold over scores), ranks
-  *    derived from each group's own count inside `finish`. Two
-  *    type-keyed partial-aggregated shuffles with O(capacity) state —
-  *    no per-type sort task anywhere, scales with executors.
-  *
-  * Exactness regime: while every type's n ≤ capacity the sketch IS the
-  * exact multiset (level 0 never compacts) and the routes are
-  * value-identical; capacity auto-scales with the largest type
-  * ([[Rfm.SketchRankRatio]] discipline — smallest power of two ≥
-  * maxN/64 clamped to [2^16, 2^20]), so past 2^20 the rank
-  * perturbation is ≤ levels·maxN/capacity — at the 256M switch point
-  * ≈ 9·256M/2^20 ≈ 2,200 rows ≈ a 10^-5 coverage drift on the 0.9
-  * target, the honest price of the scale route (conformal's guarantee
-  * degrades from exactly-⌈(n+1)·0.9⌉ to that rank ± the bound).
-  *
-  * The sketch route's OWN envelope stays loud: k = ((n+1)·9+9) div 10
-  * overflows BIGINT past n ≈ 10^18 rows/type — guarded in-plan the
-  * same q145 way (a row count no deployment reaches, but a silent wrap
-  * there would mis-rank every threshold).
-  *
-  * Switch: "auto" counts rows per type (one aggregate over the
-  * persisted input — the only driver-side scalar) and takes the window
-  * route while the LARGEST type fits the sort budget, the sketch route
-  * above it. */
+/** Split-conformal calibration (q200): two type-keyed `row_number`
+  * windows over the non-null events — rank (n+1) div 2 of the values
+  * is the lower median, rank ⌈(n+1)·0.9⌉ of the nonconformity scores
+  * is the threshold. Exact at any n; each type's partition sorts in
+  * one task. The one loud envelope is the k arithmetic: ((n+1)·9+9)
+  * overflows BIGINT past n ≈ 10^18 rows/type, so [[guardedN]] asserts
+  * it in-plan on the per-type count frame (q145 pattern). */
 object Conformal {
-  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.{Column, DataFrame}
 
-  /** The single-task window-sort envelope (round-9 measured decision,
-    * SURVEY §7.4): past this the exact route's per-type sort is a
-    * silent hours-long spill. */
-  val TypeSortBudget: Long = 256L * 1000 * 1000
-
-  /** k-arithmetic envelope of BOTH routes: ((n+1)·9+9) must stay in
-    * BIGINT. */
+  /** Largest per-type n whose ((n+1)·9+9) stays in BIGINT. */
   val KArithmeticBudget: Long = (Long.MaxValue - 9L) / 9L - 1L
 
-  private[relational] def autoCapacity(maxN: Long): Int = {
-    var c = 1 << 16
-    while (c < (1 << 20) && c.toLong * Rfm.SketchRankRatio < maxN) c <<= 1
-    c
-  }
+  /** A per-type count `n0`, failing the query past
+    * [[KArithmeticBudget]]. */
+  def guardedN(n0: Column): Column =
+    graft.ScaleGuards.guarded(n0 <= KArithmeticBudget,
+      "q200: a type's row count exceeds the BIGINT k-arithmetic " +
+        "regime ((n+1)*9+9)", n0)
 
-  /** Shared input frame of both routes: (t, event_id, v), null values
-    * dropped (conformal scores are defined on observed values). */
-  def scored(events: DataFrame): DataFrame =
-    events.filter(col("value").isNotNull)
+  /** q200's entry point. */
+  def thresholds(events: DataFrame): DataFrame = {
+    val e = graft.Caches.persist(events.filter(col("value").isNotNull)
       .select(col("event_type").as("t"), col("event_id"),
-        col("value").as("v"))
-
-  /** Exact route — the round-9 body, guard included. */
-  def thresholdsWindow(e: DataFrame): DataFrame = {
+        col("value").as("v")))
     val byV = Window.partitionBy("t").orderBy(col("v"), col("event_id"))
     val r = e.withColumn("rn", row_number().over(byV))
     // the guard is applied to the per-type COUNT frame that every
@@ -1476,12 +1422,7 @@ object Conformal {
     // equally sized window sort shared the broadcast subtree and could
     // run to completion before a guard attached only to k ever fired.
     val n = broadcast(e.groupBy("t").agg(count(lit(1)).as("n0"))
-      .select(col("t"),
-        graft.ScaleGuards.guarded(col("n0") <= TypeSortBudget,
-          "q200: an event type exceeds the 256M-row window-sort " +
-            "budget - take the sketch route (Conformal.thresholds " +
-            "route=auto switches for you)",
-          col("n0")).as("n")))
+      .select(col("t"), guardedN(col("n0")).as("n")))
     val med = r.join(n, "t")
       .filter(col("rn") === expr("(n + 1) div 2"))
       .select(col("t"), col("v").as("med"))
@@ -1493,75 +1434,12 @@ object Conformal {
       .select(col("t").as("srt"), col("sc"), col("rn"))
     val k = n.select(col("t"), col("n"),
       expr("((n + 1) * 9 + 9) div 10").cast("long").as("k"))
+    // k > n (n < 9): conformal's "threshold = ∞" — no rn = k, no row
     sr.join(broadcast(k.join(med, "t")),
         col("srt") === col("t") && col("rn") === col("k"))
       .select(col("t").as("event_type"), col("n"), col("k"),
         col("med").as("median_value"), col("sc").as("threshold"))
       .orderBy("event_type")
-  }
-
-  /** Scale route: per-type rank selection from ONE sketch pass per
-    * statistic. `capacity ≤ 0` (default) auto-scales with the largest
-    * type via [[autoCapacity]]; an explicit positive value pins it
-    * (specs). */
-  def thresholdsSketch(e0: DataFrame, capacity: Int = 0): DataFrame = {
-    val s = e0.sparkSession
-    val e = graft.Caches.persist(e0)
-    val maxN = e.groupBy("t").agg(count(lit(1)).as("n0"))
-      .agg(max("n0")).head().getLong(0)
-    val cap = if (capacity > 0) capacity else autoCapacity(maxN)
-    val medSel = udaf(
-      new graft.functions.RankSelectAgg(cap, n => Seq((n + 1L) / 2L)),
-      org.apache.spark.sql.Encoders.scalaDouble)
-    val thrSel = udaf(
-      new graft.functions.RankSelectAgg(cap,
-        n => Seq(((n + 1L) * 9L + 9L) / 10L)),
-      org.apache.spark.sql.Encoders.scalaDouble)
-    // one pass: n (guarded) + the median's rank selection per type
-    val medN = graft.Caches.persist(e.groupBy("t")
-      .agg(count(lit(1)).as("n0"), medSel(col("v")).as("medArr"))
-      .select(col("t"),
-        graft.ScaleGuards.guarded(col("n0") <= KArithmeticBudget,
-          "q200 sketch route: a type's row count exceeds the BIGINT " +
-            "k-arithmetic regime ((n+1)*9+9)",
-          col("n0")).as("n"),
-        element_at(col("medArr"), 1).as("med")))
-    // second pass over scores: the threshold's rank selection
-    val sc = e.join(broadcast(medN.select(col("t"), col("med"))), "t")
-      .select(col("t"), abs(col("v") - col("med")).as("sc"))
-    val thr = sc.groupBy("t")
-      .agg(thrSel(col("sc")).as("thrArr"))
-      .select(col("t").as("tt"), element_at(col("thrArr"), 1).as("thr"))
-    medN.join(thr, col("t") === col("tt"))
-      // k > n (n < 9): conformal's "threshold = ∞", the same dropped
-      // row as the window route's unmatched rank join. Tested on the
-      // RANK CONDITION itself, not on the selected value being NaN
-      // (round-10 advice): a type whose scores genuinely contain NaN
-      // at rank k must EMIT threshold=NaN like the window route, not
-      // vanish
-      .filter(expr("((n + 1) * 9 + 9) div 10 <= n"))
-      .select(col("t").as("event_type"), col("n"),
-        expr("((n + 1) * 9 + 9) div 10").cast("long").as("k"),
-        col("med").as("median_value"), col("thr").as("threshold"))
-      .orderBy("event_type")
-  }
-
-  /** q200's entry point: route ∈ auto | window | sketch. */
-  def thresholds(events: DataFrame, route: String = "auto"): DataFrame = {
-    val e = graft.Caches.persist(scored(events))
-    val chosen = route match {
-      case "window" | "sketch" => route
-      case "auto" =>
-        val maxN = e.groupBy("t").agg(count(lit(1)).as("n0"))
-          .agg(max("n0")).head() match {
-          case r if r.isNullAt(0) => 0L // empty input: either route
-          case r => r.getLong(0)
-        }
-        if (maxN <= TypeSortBudget) "window" else "sketch"
-      case other =>
-        throw new IllegalArgumentException(s"unknown conformal route: $other")
-    }
-    if (chosen == "window") thresholdsWindow(e) else thresholdsSketch(e)
   }
 }
 

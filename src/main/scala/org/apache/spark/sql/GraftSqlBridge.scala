@@ -29,25 +29,4 @@ object GraftSqlBridge {
 
   /** `DataType.sameType` (nullability-insensitive equality). */
   def sameType(a: types.DataType, b: types.DataType): Boolean = a.sameType(b)
-
-  /** Materialize a DataFrame into persisted RDD blocks and return a
-    * DataFrame scanning them plus the RDD handle that frees them.
-    *
-    * This is what `Dataset.localCheckpoint` does internally, minus its
-    * leak: `Dataset.unpersist` only drops CacheManager entries, so the
-    * RDD blocks behind a localCheckpoint are unreachable until driver
-    * GC + ContextCleaner — an iterative loop that checkpoints every
-    * round accumulates every round's blocks. Here the caller holds the
-    * RDD and calls `rdd.unpersist()` the moment the round is dead.
-    * Blocks materialize lazily — run an action on the returned frame
-    * (or `rdd.count()`) before unpersisting its predecessor, so the
-    * new round never recomputes through a freed parent. */
-  def materialized(df: DataFrame)
-      : (DataFrame, org.apache.spark.rdd.RDD[catalyst.InternalRow]) = {
-    val ds = df.asInstanceOf[classic.Dataset[Row]]
-    // UnsafeRow buffers are reused per partition — copy before caching
-    val rdd = ds.queryExecution.toRdd.map(_.copy())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    (ds.sparkSession.internalCreateDataFrame(rdd, ds.schema), rdd)
-  }
 }

@@ -60,21 +60,6 @@ class ScaleGuardSpec extends SparkSpec {
     assert(r(0).getLong(0) == 1L)
   }
 
-  test("q182's AUC guard: 2.5M docs/class passes, 10^7 per class fails loudly") {
-    val sp = spark
-    import sp.implicits._
-    val bound = Long.MaxValue / 1500000L
-    def probe(np: Long, nn: Long) =
-      Seq((np, nn)).toDF("n_pos", "n_neg")
-        .select(ScaleGuards.guarded(
-          ScaleGuards.productWithin("n_pos", "n_neg", bound),
-          "q182: n_pos*n_neg exceeds the BIGINT micro regime",
-          lit(1L)).as("v")).collect()
-    assert(probe(2400000L, 2400000L)(0).getLong(0) == 1L,
-      "the documented ~2.5M-per-class regime must pass")
-    fires(probe(10000000L, 10000000L), "q182")
-  }
-
   test("q198's KS guard: 3M docs/side passes, 10^7 per side fails loudly") {
     val sp = spark
     import sp.implicits._
@@ -90,31 +75,17 @@ class ScaleGuardSpec extends SparkSpec {
     fires(probe(10000000L, 10000000L), "q198")
   }
 
-  test("q181's Gini guard: 10^6 types x 4.6M avg passes, 10x that fails") {
+  test("q200's k-arithmetic guard passes at its bound with k exact, fails one past it") {
     val sp = spark
     import sp.implicits._
-    val bound = Long.MaxValue / 2000000L
-    def probe(n: Long, total: Long) =
-      Seq((n, total)).toDF("n", "total")
-        .select(ScaleGuards.guarded(
-          ScaleGuards.productWithin("n", "total", bound),
-          "q181: n*total exceeds the micro magnitude regime",
-          lit(1L)).as("v")).collect()
-    assert(probe(1000000L, 4000000000000L / 1000000L * 1)(0)
-        .getLong(0) == 1L, "the documented regime must pass")
-    fires(probe(1000000L, 46000000L), "q181")
-  }
-
-  test("q200's per-type budget guard fires past 256M rows, passes at it") {
-    val sp = spark
-    import sp.implicits._
-    val budget = 256L * 1000 * 1000
-    def probe(n: Long) = Seq(Tuple1(n)).toDF("n")
-      .select(ScaleGuards.guarded(col("n") <= budget,
-        "q200: an event type exceeds the 256M-row window-sort budget",
-        lit(1L)).as("v")).collect()
-    assert(probe(budget)(0).getLong(0) == 1L)
-    fires(probe(budget + 1), "q200")
+    val bound = relational.Conformal.KArithmeticBudget
+    def probe(n: Long) = Seq(Tuple1(n)).toDF("n0")
+      .select(relational.Conformal.guardedN(col("n0")).as("n"))
+    // at the bound the production k expression still fits BIGINT
+    val k = probe(bound).select(expr("((n + 1) * 9 + 9) div 10"))
+      .collect()(0).getLong(0)
+    assert(BigInt(k) == ((BigInt(bound) + 1) * 9 + 9) / 10)
+    fires(probe(bound + 1).collect(), "q200")
   }
 
   test("the deployed queries still answer in the exact regime (sf0.001)") {

@@ -21,6 +21,25 @@ class EnrichSpec extends SparkSpec {
     assert(df.collect().head.isNullAt(0))
   }
 
+  test("an unparseable enqueuedTime reads as null, a valid one parses") {
+    val env = spark.sql(
+      """SELECT deviceId, enqueuedTime, named_struct(
+        |  'battery', 1.0D, 'barometer', 2.0D,
+        |  'geolocation', named_struct('lat', 1.0D, 'lon', 2.0D, 'alt', 3.0D),
+        |  'accelerometer', named_struct('x', 3.0D, 'y', 4.0D, 'z', 0.0D),
+        |  'gyroscope', named_struct('x', 0.0D, 'y', 0.0D, 'z', 0.0D),
+        |  'magnetometer', named_struct('x', 0.0D, 'y', 0.0D, 'z', 0.0D))
+        |  AS telemetry
+        |FROM VALUES ('d1', 'not a time'), ('d2', '2024-01-02 03:04:05')
+        |  AS t(deviceId, enqueuedTime)""".stripMargin)
+    val got = Enrich.telemetry(env).orderBy("deviceId")
+      .select("deviceId", "enqueuedTime", "AccelMagnitude").collect()
+    assert(got.map(_.getString(0)).toSeq == Seq("d1", "d2"))
+    assert(got(0).isNullAt(1), "an unparseable time must read as null")
+    assert(!got(1).isNullAt(1), "a valid time must still parse")
+    assert(got(0).getDouble(2) == 5.0, "the rest of the row is kept")
+  }
+
   test("anomalyFlag ORs the three signals, null-safe") {
     import spark.implicits._
     def s(v: java.lang.Integer) = struct(lit(v).cast("int").as("isAnomaly"))

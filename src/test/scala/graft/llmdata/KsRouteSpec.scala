@@ -13,25 +13,24 @@ class KsRouteSpec extends graft.SparkSpec {
 
   test("sample route with budget >= side counts is row-identical to exact") {
     val docs = Tables.documents(spark, sf)
-    val exact = KsDrift.drift(docs, "exact").collect()
     val rows = KsDrift.splitRows(docs)
+    val exact = KsDrift.ksFold(rows).collect()
     val sampleAll = KsDrift.ksFold(
       KsDrift.sampled(rows, budget = Long.MaxValue / 2)).collect()
     assert(exact.nonEmpty && exact.toSeq == sampleAll.toSeq,
       "stride 1 must be the identity — the routes share one fold")
-    // auto stays on the exact route inside the micro regime
-    val auto = KsDrift.drift(docs, "auto").collect()
-    assert(auto.toSeq == exact.toSeq)
+    // drift stays on the exact route inside the micro regime
+    assert(KsDrift.drift(docs).collect().toSeq == exact.toSeq)
   }
 
   test("sub-budget sample is deterministic and budget-bounded") {
     val docs = Tables.documents(spark, sf)
-    val a = KsDrift.drift(docs, "sample").collect()
-    val b = KsDrift.drift(docs, "sample").collect()
+    val rows = KsDrift.splitRows(docs)
+    val a = KsDrift.ksFold(KsDrift.sampled(rows)).collect()
+    val b = KsDrift.ksFold(KsDrift.sampled(rows)).collect()
     assert(a.toSeq == b.toSeq, "id-stride sampling must be replay-stable")
     // fixture is far below the budget, so the sample IS the corpus
     // here; bound the reported sizes against a tiny explicit budget
-    val rows = KsDrift.splitRows(docs)
     val small = KsDrift.ksFold(KsDrift.sampled(rows, budget = 100L))
       .collect().head
     val (nTr, nTe) = (small.getLong(3), small.getLong(4))

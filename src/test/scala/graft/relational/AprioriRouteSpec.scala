@@ -6,9 +6,10 @@ import org.apache.spark.sql.functions._
   * — the q181/q182 discipline applied to the last documentation-only
   * route): the per-basket C(b,3) generation route and the three-legged
   * candidate⋈items join must COUNT IDENTICALLY on both corpus shapes,
-  * and the auto-picker must take the generate arm at TPC-H-ish basket
-  * lengths and the candidate arm past the bound — where per-basket
-  * generation would materialize C(b,3) rows per basket. */
+  * and the measured max basket length must pick the generate arm at
+  * TPC-H-ish basket lengths and the candidate arm past the bound —
+  * where per-basket generation would materialize C(b,3) rows per
+  * basket. */
 class AprioriRouteSpec extends graft.SparkSpec {
   import org.apache.spark.sql.DataFrame
 
@@ -39,33 +40,44 @@ class AprioriRouteSpec extends graft.SparkSpec {
       Seq("a", "b", "c") ++ (0 until 47).map(j => s"f${(i / 2) * 100 + j}")
     }
 
+  /** Max basket lengths that pick each counting plan. */
+  private val generate = 0L
+  private val candidate = Apriori.LongBasketAt + 1L
+
   private def counted(items: DataFrame, thr: Long,
-      route: String): Seq[(String, String, String, Long)] =
-    Apriori.triples(items, thr, forceRoute = Some(route))
+      maxBasket: Long): Seq[(String, String, String, Long)] =
+    Apriori.triples(items, thr, maxBasket)
       .collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2),
         r.getLong(3)))
       .toSeq.sorted
 
+  /** True when the counting plan for `maxBasket` explodes per-basket
+    * triples (the generate plan), false for the candidate join. */
+  private def generates(maxBasket: Long): Boolean =
+    Apriori.triples(itemsOf(shortBaskets), 3, maxBasket)
+      .queryExecution.optimizedPlan.toString.contains("Generate")
+
   test("an empty basket table returns empty on every route — the auto profile's null max is not an NPE") {
     val items = itemsOf(Seq.empty)
-    assert(Apriori.triples(items, 1).collect().isEmpty)
-    assert(Apriori.triples(items, 1, Some("generate")).collect().isEmpty)
-    assert(Apriori.triples(items, 1, Some("candidate")).collect().isEmpty)
+    assert(Apriori.profile(items) == ((0L, 0L)),
+      "max over zero baskets is NULL and must read as 0")
+    assert(Apriori.triples(items, 1, generate).collect().isEmpty)
+    assert(Apriori.triples(items, 1, candidate).collect().isEmpty)
   }
 
   test("route picker: generate at TPC-H-ish basket lengths, candidate past the bound, boundary inclusive") {
-    assert(Apriori.route(4) == "generate")
-    assert(Apriori.route(Apriori.LongBasketAt) == "generate",
+    assert(generates(4))
+    assert(generates(Apriori.LongBasketAt),
       "the bound itself stays on the measured-right generate arm")
-    assert(Apriori.route(Apriori.LongBasketAt + 1) == "candidate")
-    assert(Apriori.route(50) == "candidate")
+    assert(!generates(Apriori.LongBasketAt + 1))
+    assert(!generates(50))
   }
 
   test("both routes count identically on a short-basket corpus") {
     val items = graft.Caches.persist(itemsOf(shortBaskets))
-    val gen = counted(items, thr = 3, route = "generate")
-    val cand = counted(items, thr = 3, route = "candidate")
+    val gen = counted(items, thr = 3, generate)
+    val cand = counted(items, thr = 3, candidate)
     assert(gen.nonEmpty, "the planted triple must pass the floor")
     assert(gen.exists(t => (t._1, t._2, t._3) == ("a", "b", "c")))
     assert(gen == cand,
@@ -74,20 +86,16 @@ class AprioriRouteSpec extends graft.SparkSpec {
 
   test("both routes count identically on a long-basket corpus, and the auto-pick takes the candidate arm") {
     val items = graft.Caches.persist(itemsOf(longBaskets))
-    val gen = counted(items, thr = 2, route = "generate")
-    val cand = counted(items, thr = 2, route = "candidate")
+    val gen = counted(items, thr = 2, generate)
+    val cand = counted(items, thr = 2, candidate)
     assert(gen.nonEmpty)
     assert(gen == cand,
       s"routes diverged on long baskets: generate=$gen candidate=$cand")
-    // the auto route: max basket 50 > LongBasketAt ⇒ candidate arm;
-    // pinned by equality against the forced candidate plan
-    val auto = Apriori.triples(items, 2).collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2),
-        r.getLong(3))).toSeq.sorted
-    assert(auto == cand)
-    val maxBasket = items.groupBy("bid")
-      .agg(count(lit(1)).as("b")).agg(max("b")).head().getLong(0)
-    assert(Apriori.route(maxBasket) == "candidate")
+    // the measured profile: max basket 50 > LongBasketAt ⇒ candidate
+    val (baskets, maxBasket) = Apriori.profile(items)
+    assert(baskets == 10L && maxBasket == 50L)
+    assert(!generates(maxBasket))
+    assert(counted(items, thr = 2, maxBasket) == cand)
   }
 
   test("the shuffle candidate-join arm counts identically to the broadcast arm on both routes") {
@@ -100,17 +108,17 @@ class AprioriRouteSpec extends graft.SparkSpec {
       Apriori.candidates(Apriori.frequentPairs(items, thr)))
     assert(cand.count() > 0, "the fallback must be exercised on a " +
       "non-trivial candidate set")
-    def sup(route: String, bcast: Boolean) =
-      Apriori.countTriples(items, cand, route, broadcastCand = bcast)
+    def sup(longBaskets: Boolean, bcast: Boolean) =
+      Apriori.countTriples(items, cand, longBaskets, broadcastCand = bcast)
         .filter(col("sup") >= thr).collect()
         .map(r => (r.getString(0), r.getString(1), r.getString(2),
           r.getLong(3))).toSeq.sorted
-    for (route <- Seq("generate", "candidate")) {
-      val b = sup(route, bcast = true)
-      val s = sup(route, bcast = false)
+    for (longBaskets <- Seq(false, true)) {
+      val b = sup(longBaskets, bcast = true)
+      val s = sup(longBaskets, bcast = false)
       assert(b.nonEmpty)
-      assert(b == s,
-        s"broadcast and shuffle arms diverged on $route: $b vs $s")
+      assert(b == s, "broadcast and shuffle arms diverged with " +
+        s"longBaskets=$longBaskets: $b vs $s")
     }
   }
 }

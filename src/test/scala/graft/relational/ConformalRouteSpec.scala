@@ -1,99 +1,46 @@
 package graft.relational
 
-import graft.Tables
 import org.apache.spark.sql.functions._
 
-/** Gates for q200's scale-aware route switch (round-10: the round-9
-  * loud guard turned into an answer). The load-bearing properties:
-  * both routes emit IDENTICAL rows in the sketch's exact regime, the
-  * auto switch picks the window route below the budget, the window
-  * route's 256M guard stays loud for explicit calls, the sketch
-  * route's own k-arithmetic envelope is loud, and the n < 9
-  * degenerate drops the row on BOTH routes. */
+/** q200's degenerate and envelope cases on its one plan: a type with
+  * n < 9 emits no row, and the k-arithmetic guard rides the per-type
+  * count frame (ScaleGuardSpec drives it on both sides of its bound). */
 class ConformalRouteSpec extends graft.SparkSpec {
-  private val sf = "/root/testdata/sf0.01"
 
-  test("window and sketch routes emit identical rows in the exact regime") {
-    val events = Tables.events(spark, sf)
-    val w = Conformal.thresholds(events, "window").collect()
-    val k = Conformal.thresholds(events, "sketch").collect()
-    assert(w.nonEmpty, "fixture must produce thresholds")
-    assert(w.toSeq == k.toSeq,
-      "routes must be value-identical while every type fits the " +
-        "sketch capacity (exact multiset regime)")
-  }
-
-  test("route equality holds under a capacity forcing multi-level merges (still exact <= cap)") {
-    // pin a capacity well above the largest type but small enough that
-    // auto would have picked the same: the point is the EXPLICIT
-    // capacity plumbing, and that equality is a property of the exact
-    // regime, not of one lucky capacity value
-    val e = Conformal.scored(Tables.events(spark, sf))
-    val maxN = e.groupBy("t").agg(count(lit(1)).as("n"))
-      .agg(max("n")).head().getLong(0)
-    val cap = Integer.highestOneBit(maxN.toInt) * 2 // smallest 2^k > maxN
-    val w = Conformal.thresholdsWindow(e).collect()
-    val k = Conformal.thresholdsSketch(e, cap).collect()
-    assert(w.toSeq == k.toSeq)
-  }
-
-  test("auto picks the window route below the budget (plan has window sorts, no sketch agg)") {
-    val df = Conformal.thresholds(Tables.events(spark, sf))
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("Window"),
-      "below the budget auto must take the exact window route")
-    assert(!plan.contains("RankSelectAgg"),
-      "the sketch aggregator must not appear on the window route")
-  }
-
-  test("explicit window route stays loud past the 256M budget; sketch k-guard loud past 10^18") {
-    // the guards are expression-level (ScaleGuardSpec drives them at
-    // both sides of each bound with synthetic count frames); here pin
-    // that BOTH routes still carry one — a switched route that
-    // silently dropped its envelope would regress round 9's finding
-    val sp = spark
-    import sp.implicits._
-    def fires(body: => Any, frag: String): Unit = {
-      val e = intercept[Throwable] { body }
-      def messages(t: Throwable): Seq[String] =
-        if (t == null) Seq.empty
-        else Option(t.getMessage).toSeq ++ messages(t.getCause)
-      assert(messages(e).exists(_.contains(frag)),
-        s"expected a loud '$frag' failure, got: $e")
-    }
-    val over = Seq.tabulate(10)(i =>
-      ("hot", i.toLong, i.toDouble)).toDF("t", "event_id", "v")
-    // window: synthetic frame is tiny, so drive the guard expression
-    // directly at budget+1 the ScaleGuardSpec way
-    fires(
-      over.groupBy("t").agg(count(lit(1)).as("n0"))
-        .select(graft.ScaleGuards.guarded(
-          lit(Conformal.TypeSortBudget + 1) <= Conformal.TypeSortBudget,
-          "q200: an event type exceeds the 256M-row window-sort budget",
-          col("n0")).as("n")).collect(),
-      "window-sort budget")
-    fires(
-      over.groupBy("t").agg(count(lit(1)).as("n0"))
-        .select(graft.ScaleGuards.guarded(
-          lit(Conformal.KArithmeticBudget + 1) <= Conformal.KArithmeticBudget,
-          "q200 sketch route: a type's row count exceeds the BIGINT " +
-            "k-arithmetic regime",
-          col("n0")).as("n")).collect(),
-      "k-arithmetic regime")
-  }
-
-  test("n < 9 types emit no row on either route (threshold = infinity)") {
+  test("n < 9 types emit no row (threshold = infinity)") {
     val sp = spark
     import sp.implicits._
     // 8 rows: k = ceil(9*9/10) = 9 > n = 8 -> dropped; a 10-row type
-    // survives alongside it
-    val e = (Seq.tabulate(8)(i => ("tiny", i.toLong, i.toDouble)) ++
-      Seq.tabulate(10)(i => ("big", 100L + i, i.toDouble)))
-      .toDF("t", "event_id", "v")
-    val w = Conformal.thresholdsWindow(e).collect()
-    val k = Conformal.thresholdsSketch(e, capacity = 64).collect()
-    assert(w.map(_.getString(0)).toSeq == Seq("big"))
-    assert(k.map(_.getString(0)).toSeq == Seq("big"))
-    assert(w.toSeq == k.toSeq)
+    // (plus one null value, which is not scored) survives alongside it
+    val events = (Seq.tabulate(8)(i => ("tiny", i.toLong, Option(i.toDouble))) ++
+      Seq.tabulate(10)(i => ("big", 100L + i, Option(i.toDouble))) ++
+      Seq(("big", 200L, Option.empty[Double])))
+      .toDF("event_type", "event_id", "value")
+    val got = Conformal.thresholds(events).collect()
+    assert(got.map(_.getString(0)).toSeq == Seq("big"))
+    // n = 10 non-null values: k = ((10+1)*9+9) div 10 = 10, median =
+    // rank 5 of 0..9 = 4.0, threshold = the largest score |9 - 4| = 5
+    val r = got.head
+    assert((r.getLong(1), r.getLong(2), r.getDouble(3), r.getDouble(4)) ==
+      ((10L, 10L, 4.0, 5.0)))
+  }
+
+  test("the k-arithmetic guard is in q200's plan and fails loudly past its bound") {
+    val sp = spark
+    import sp.implicits._
+    val events = Seq(("a", 1L, 1.0)).toDF("event_type", "event_id", "value")
+    val plan = Conformal.thresholds(events).queryExecution.analyzed
+      .toString
+    assert(plan.contains("k-arithmetic"),
+      "the per-type count frame must carry the guard")
+    val e = intercept[Throwable] {
+      Seq(Tuple1(Conformal.KArithmeticBudget + 1)).toDF("n0")
+        .select(Conformal.guardedN(col("n0"))).collect()
+    }
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Seq.empty
+      else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    assert(messages(e).exists(_.contains("k-arithmetic")),
+      s"expected a loud k-arithmetic failure, got: $e")
   }
 }

@@ -1,119 +1,73 @@
 package graft.relational
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
-/** Route equality for q171's RFM quintile grid: the ntile-window
-  * route and the sketch-boundary scale route must emit identical
-  * codes in the sketch's exactness regime (entities ≤ capacity). */
+/** q171's RFM quintile grid against a driver-side recompute: each
+  * customer's three ntile(5) codes follow the (value, cust)
+  * tie-breaks, and the census is the per-cell count and min customer
+  * of those codes. */
 class RfmRouteSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
-  test("sketch route codes ≡ window route codes, per customer (exact regime)") {
-    val sp = spark
-    val rfm = Rfm.triples(graft.Tables.orders(sp, sf))
-    val w = Rfm.codesWindow(rfm)
+  /** (cust, recency, frequency, monetary) rows of the fixture. */
+  private def triples = Rfm.triples(graft.Tables.orders(spark, sf))
+    .select("cust", "recency", "frequency", "monetary").collect()
+    .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+    .toSeq
+
+  /** ntile(5) over customers already in rank order: the first n mod 5
+    * buckets hold ⌊n/5⌋ + 1 rows, the rest ⌊n/5⌋. */
+  private def ntile5(ranked: Seq[Long]): Map[Long, Int] = {
+    val (q, rem) = (ranked.length / 5, ranked.length % 5)
+    ranked.zipWithIndex.map { case (c, i) =>
+      val b = if (i < rem * (q + 1)) i / (q + 1)
+              else rem + (i - rem * (q + 1)) / q
+      c -> (b + 1)
+    }.toMap
+  }
+
+  /** Driver-side (cust → (r, f, m)) codes. */
+  private def expectedCodes(t: Seq[(Long, Long, Long, Double)])
+      : Map[Long, (Int, Int, Int)] = {
+    val r = ntile5(t.sortBy(x => (-x._2, x._1)).map(_._1))
+    val f = ntile5(t.sortBy(x => (x._3, x._1)).map(_._1))
+    val m = ntile5(t.sortBy(x => (x._4, x._1)).map(_._1))
+    t.map(x => x._1 -> ((r(x._1), f(x._1), m(x._1)))).toMap
+  }
+
+  test("ntile codes ≡ a driver-side (value, cust) ranking per customer, boundary ties included") {
+    val t = triples
+    assert(t.length >= 5, "fixture must fill every quintile")
+    val want = expectedCodes(t)
+    val got = Rfm.codesWindow(Rfm.triples(graft.Tables.orders(spark, sf)))
       .select("cust", "r", "f", "m").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3)))
-      .sortBy(_._1)
-    val s = Rfm.codesSketch(rfm)
-      .select("cust", "r", "f", "m").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3)))
-      .sortBy(_._1)
-    assert(w.nonEmpty && w.length == s.length)
-    assert(w.toSeq == s.toSeq,
-      "sketch-boundary assignment must reproduce ntile codes exactly " +
-        "in the exact regime, including (value, cust) tie-breaks")
-    // the fixture must actually exercise tie-breaks at a boundary,
-    // else the composite encoding is untested: some recency or
-    // frequency value must straddle a quintile boundary
-    val fTies = Rfm.codesWindow(rfm)
-      .groupBy("frequency").agg(countDistinct(col("f")).as("nf"))
-      .filter(col("nf") > 1).count()
-    val rTies = Rfm.codesWindow(rfm)
-      .groupBy("recency").agg(countDistinct(col("r")).as("nr"))
-      .filter(col("nr") > 1).count()
-    assert(fTies + rTies > 0,
-      "fixture has no tie group straddling a boundary - equality proves nothing")
+      .map(r => r.getLong(0) -> ((r.getInt(1), r.getInt(2), r.getInt(3))))
+      .toMap
+    assert(got == want,
+      "codes must follow the (value, cust) tie-break on every dimension")
+    // the fixture must exercise tie-breaks at a boundary, else the
+    // comparison proves nothing about them: some recency or frequency
+    // value must straddle a quintile boundary
+    def straddles(value: ((Long, Long, Long, Double)) => Long,
+        code: ((Int, Int, Int)) => Int): Boolean =
+      t.groupBy(value).values.exists(g => g.map(x => code(want(x._1)))
+        .distinct.size > 1)
+    assert(straddles(_._2, _._1) || straddles(_._3, _._2),
+      "fixture has no tie group straddling a boundary")
   }
 
-  test("segment census identical across both forced routes and auto") {
-    val sp = spark
-    val orders = graft.Tables.orders(sp, sf)
-    def rows(route: String) =
-      Rfm.segments(orders, route).collect().map(_.toSeq).toSeq
-    val w = rows("window")
-    assert(w.nonEmpty)
-    assert(rows("sketch") == w, "census must not depend on the route")
-    assert(rows("auto") == w, "auto picks a route, never changes the answer")
-  }
-
-  test("lossy regime still yields a valid census (codes 1..5, counts sum to n)") {
-    val sp = spark
-    val rfm = Rfm.triples(graft.Tables.orders(sp, sf))
-    val n = rfm.count()
-    assert(n > 32, "fixture must exceed the tiny capacity for a lossy run")
-    val codes = Rfm.codesSketch(rfm, capacity = 32)
-    val bad = codes.filter(
-      col("r") < 1 || col("r") > 5 || col("f") < 1 || col("f") > 5 ||
-        col("m") < 1 || col("m") > 5).count()
-    assert(bad == 0, "lossy boundaries must still code every row into 1..5")
-    val census = Rfm.census(codes)
-    val total = census.agg(sum("n_customers")).collect()(0).getLong(0)
-    assert(total == n, "census partitions the entity frame")
-  }
-
-  test("sketch capacity scales with the entity frame past the route budget") {
-    // below the floor: exact regime (covers every oracle-sized frame)
-    assert(Rfm.autoCapacity(1000L) == (1 << 16))
-    assert(Rfm.autoCapacity(1L << 16) == (1 << 16))
-    // everywhere below the memory ceiling the n/cap ratio regime holds
-    // (the fixed-2^16 bug: at 100M entities the ratio was 1526, not 64)
-    for (n <- Seq(Rfm.WindowEntityBudget + 1, 10L * 1000 * 1000,
-        60L * 1000 * 1000)) {
-      val c = Rfm.autoCapacity(n)
-      assert(c.toLong * Rfm.SketchRankRatio >= n,
-        s"n/cap ratio regime must hold at n=$n (got cap=$c)")
-    }
-    assert(Rfm.autoCapacity(10L * 1000 * 1000) > (1 << 16),
-      "capacity must grow with the frame, not stay a fixed 2^16")
-    // memory ceiling holds at any n
-    assert(Rfm.autoCapacity(Long.MaxValue / 2) == (1 << 20))
-  }
-
-  test("a monetary tie group straddling a boundary refuses loudly") {
-    val sp = spark
-    import sp.implicits._
-    // 10 customers, all with identical monetary: every boundary falls
-    // inside the one tie group - value comparison cannot reproduce the
-    // cust tie-break, so the in-plan guard must raise
-    val rfm = (1 to 10).map(i => (i.toLong, i.toLong, i.toLong, 42.0))
-      .toDF("cust", "recency", "frequency", "monetary")
-    val ex = intercept[Exception] {
-      Rfm.codesSketch(rfm).collect()
-    }
-    def causes(t: Throwable): Seq[Throwable] =
-      if (t == null) Nil else t +: causes(t.getCause)
-    assert(causes(ex).exists(c =>
-      Option(c.getMessage).exists(_.contains("monetary tie group"))),
-      s"expected the tie-guard message, got: ${ex.getMessage}")
-  }
-
-  test("composite encoding out of double-exact range refuses loudly") {
-    val sp = spark
-    import sp.implicits._
-    // recency beyond 2^21 would make vkey*2^31 + cust inexact
-    val rfm = (1 to 10).map(i =>
-        ((1L << 31) + i, (1L << 22) + i, i.toLong, i * 10.0))
-      .toDF("cust", "recency", "frequency", "monetary")
-    val ex = intercept[Exception] {
-      Rfm.codesSketch(rfm).collect()
-    }
-    def causes(t: Throwable): Seq[Throwable] =
-      if (t == null) Nil else t +: causes(t.getCause)
-    assert(causes(ex).exists(c =>
-      Option(c.getMessage).exists(_.contains("double-exact range"))),
-      s"expected the range-guard message, got: ${ex.getMessage}")
+  test("segment census ≡ the driver-side codes' per-cell count and min customer") {
+    val t = triples
+    val want = expectedCodes(t).toSeq
+      .groupBy(_._2)
+      .map { case ((r, f, m), g) =>
+        (r.toLong, f.toLong, m.toLong, g.size.toLong, g.map(_._1).min) }
+      .toSeq.sorted
+    val got = Rfm.segments(graft.Tables.orders(spark, sf)).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getLong(4))).toSeq
+    assert(got == want, "census rows, in (r, f, m) order")
+    assert(got.map(_._4).sum == t.length, "census partitions the customers")
   }
 }
